@@ -24,7 +24,7 @@ object Stress {
 
   def generate(spark: SparkSession, dir: String, mult: Int): Unit = {
     import spark.implicits._
-    val vocab = spark.read.parquet(vocabSource)
+    val vocab = core.Tables.open(spark, vocabSource)
       .select(explode(split(col("text"), " ")).as("w"))
       .filter(length(col("w")) > 0).distinct().orderBy("w")
       .as[String].collect()
@@ -178,7 +178,7 @@ object Stress {
       chunksPath = s"$dir/posidx_chunks")
     if (!marker.exists()) {
       println(s"[stress] building positional index under $idxDir")
-      val docs = spark.read.parquet(s"$dir/documents.parquet")
+      val docs = core.Tables.open(spark, s"$dir/documents.parquet")
         .select(col("doc_id").as("chunkId"), col("text").as("indexedData"))
       idx.index(docs)
       idx.buildPhraseIndex(docs)
@@ -187,7 +187,7 @@ object Stress {
     if (!chunksMarker.exists()) {
       // the filter gate's side: a chunks table carrying the metadata column
       // (pushdown-able flat lang), id-matched to the index
-      spark.read.parquet(s"$dir/documents.parquet")
+      core.Tables.open(spark, s"$dir/documents.parquet")
         .select(col("doc_id").as("chunkId"), col("lang"))
         .write.mode("overwrite").parquet(s"$dir/posidx_chunks")
       java.nio.file.Files.writeString(chunksMarker.toPath, "")
@@ -262,10 +262,10 @@ object Stress {
     // pays all warmup and the ratio reads sub-linear.
     val results = scales.map { m =>
       val dir = s"$baseDir/x$m"
-      consume(spark.read.parquet(s"$dir/documents.parquet"))
-      consume(spark.read.parquet(s"$dir/lineitem.parquet"))
-      consume(spark.read.parquet(s"$dir/part.parquet"))
-      consume(spark.read.parquet(s"$dir/supplier.parquet"))
+      consume(core.Tables.open(spark, s"$dir/documents.parquet"))
+      consume(core.Tables.open(spark, s"$dir/lineitem.parquet"))
+      consume(core.Tables.open(spark, s"$dir/part.parquet"))
+      consume(core.Tables.open(spark, s"$dir/supplier.parquet"))
       val rows: Seq[(String, () => DataFrame)] =
         active.map(q => q -> (() => SparkEntry.queries(q)(spark, dir))) ++
           (if (activePos.nonEmpty)

@@ -306,7 +306,7 @@ object Cli {
         // per-column completeness + exact cardinality of a parquet corpus —
         // the trust report before ingesting a new drop (one aggregation pass)
         val in = req("in")
-        val df = spark.read.parquet(in)
+        val df = graft.core.Tables.open(spark, in)
         val cols = opt("columns").map(_.split(',').toSeq.map(_.trim).filter(_.nonEmpty))
           .getOrElse(df.columns.toSeq)
         println(Formatting.jsonIndent(
@@ -352,14 +352,14 @@ object Cli {
           System.err.println("[curate] --decontaminate-substr takes precedence; " +
             "--decontaminate-bloom is ignored")
         val bench = opt("benchmark").map(p => (
-          spark.read.parquet(p),
+          graft.core.Tables.open(spark, p),
           opt("benchmark-id-col").getOrElse(idCol),
           opt("benchmark-text-col").getOrElse(textCol)))
         // --lm-train <parquet dir>: train a bigram LM on that corpus and gate
         // docs above --lm-max-nll (CCNet's train-clean/score-crawl split)
         val lm = opt("lm-train").map { p =>
           (graft.operators.LanguageModel.train(
-            spark.read.parquet(p), idCol, textCol),
+            graft.core.Tables.open(spark, p), idCol, textCol),
            opt("lm-max-nll").map(_.toDouble).getOrElse(10.0))
         }
         // --quality-model <weights file>: fasttext-style linear gate, shipped
@@ -368,12 +368,12 @@ object Cli {
           (graft.functions.LinearQualityModel.fromFile(p),
            opt("quality-model-min").map(_.toDouble).getOrElse(0.5))
         }
-        val docs = spark.read.parquet(in)
+        val docs = graft.core.Tables.open(spark, in)
         val curated = Pipeline.curate(docs, idCol, textCol, cfg,
           benchmark = bench, stratumCol = opt("stratum-col"),
           qualityModel = qm, lmModel = lm)
         curated.write.mode("overwrite").parquet(out)
-        val (nIn, nOut) = (docs.count(), spark.read.parquet(out).count())
+        val (nIn, nOut) = (docs.count(), graft.core.Tables.open(spark, out).count())
         println(s"""{"in":$nIn,"out":$nOut,"dropped":${nIn - nOut},"path":"$out"}""")
       case "fsck" =>
         // Consistency audit: manifest drift, orphan/duplicate chunks, index
@@ -398,7 +398,7 @@ object Cli {
         val idCol = opt("id-col").getOrElse("doc_id")
         val cols = opt("cols").map(_.split(",").toSeq).getOrElse(Nil)
         val manifest = graft.operators.Export.jsonlShards(
-          spark.read.parquet(in), idCol, out, n, cols)
+          graft.core.Tables.open(spark, in), idCol, out, n, cols)
         val rows = manifest.collect()
         val docs = rows.map(_.getAs[Long]("n_docs")).sum
         val bytes = rows.map(_.getAs[Long]("n_bytes")).sum
@@ -464,7 +464,7 @@ object Cli {
         // [--lang-col lang] — one aggregation pass, JSON summary per language.
         val in = req("in"); val textCol = opt("text-col").getOrElse("text")
         val langCol = opt("lang-col").getOrElse("lang")
-        val docs = spark.read.parquet(in)
+        val docs = graft.core.Tables.open(spark, in)
         val rows = graft.operators.TextAnalysis.corpusStats(
           docs.select(org.apache.spark.sql.functions.col(langCol).as("lang"),
             org.apache.spark.sql.functions.col(textCol).as("text")),

@@ -1475,7 +1475,7 @@ object Queries {
         s, dir, chunksPath = s"$dir/chunks", selectByRounded = Some(5))
       idx.index(docs)
       val f = FilterDsl.filterColumn("""lang = "en" and n_chars > "200"""",
-        s.read.parquet(s"$dir/chunks").schema)
+        graft.core.Tables.open(s, s"$dir/chunks").schema)
       idx.booleanSearch("(join AND vector) OR (spark NOT hash)", 20, Some(f))
         .select(col("chunkId").as("doc_id"), round(col("score"), 5).as("score"))
         .orderBy(col("score").desc, col("doc_id").asc)

@@ -5,7 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 /** Test-table access for the driver-declared queries (TESTDATA.md). */
 object Tables {
   def t(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+    graft.core.Tables.open(spark, s"$sfDir/$name.parquet")
 
   def lineitem(s: SparkSession, d: String): DataFrame = t(s, d, "lineitem")
   def orders(s: SparkSession, d: String): DataFrame = t(s, d, "orders")

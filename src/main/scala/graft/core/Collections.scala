@@ -108,18 +108,17 @@ final class CollectionManager(
     * pre-versioning table (no `rev` column) reads as rev 0 unchanged.
     */
   def minhashSigs(name: String): Option[DataFrame] =
-    if (fs.exists(new Path(sigsPath(name)))) {
-      val raw = spark.read.parquet(sigsPath(name))
-      if (!raw.columns.contains("rev")) Some(raw)
-      else Some(raw
+    Tables.openIf(spark, sigsPath(name)).map { raw =>
+      if (!raw.columns.contains("rev")) raw
+      else raw
         .groupBy("ex_id")
         .agg(max_by(struct("sig0", "sig1", "sig2", "sig3", "deleted"), col("rev"))
           .as("_latest"))
         .filter(!col("_latest.deleted"))
         .select(col("ex_id"), col("_latest.sig0").as("sig0"),
           col("_latest.sig1").as("sig1"), col("_latest.sig2").as("sig2"),
-          col("_latest.sig3").as("sig3")))
-    } else None
+          col("_latest.sig3").as("sig3"))
+    }
 
   /** Next revision number + legacy migration: a pre-versioning table (plain
     * ex_id..sig3) rewrites ONCE to versioned rows at rev 0, then every
@@ -140,10 +139,10 @@ final class CollectionManager(
         spark.sessionState.newHadoopConf(), sigsPath(name), "rev") match {
       // the footer max doubles as the schema probe: Some proves the rev
       // column exists, so the versioned fast path never constructs a Spark
-      // read at all (schema inference alone schedules a listing job)
+      // read at all
       case Some(maxRev) => maxRev + 1L
       case None =>
-        val raw = spark.read.parquet(sigsPath(name))
+        val raw = Tables.open(spark, sigsPath(name))
         if (!raw.columns.contains("rev")) {
           val staging = s"${sigsPath(name)}__staging"
           raw.withColumn("rev", lit(0L)).withColumn("deleted", lit(false))
@@ -329,7 +328,7 @@ final class CollectionManager(
     if (nBuckets > 0) writeBucketedTable(docs, "id", nBuckets, docsPath(name))
     else docs.write.mode(SaveMode.Overwrite).parquet(docsPath(name))
 
-    val persisted = spark.read.parquet(docsPath(name)).drop("bucket")
+    val persisted = Tables.open(spark, docsPath(name)).drop("bucket")
     val chunks = Indexing.buildChunks(persisted, embedder, startId = 0L)
     if (nBuckets > 0)
       writeBucketedTable(chunks, "documentId", nBuckets, chunksPath(name))
@@ -378,7 +377,7 @@ final class CollectionManager(
     val maxId =
       if (nChunks == 0L) -1L
       else footerMax.getOrElse(
-        spark.read.parquet(chunksPath(name))
+        Tables.open(spark, chunksPath(name))
           .agg(coalesce(max("chunkId"), lit(-1L))).head().getLong(0))
     val nDocs = ParquetMeta.rowCount(conf, docsPath(name))
     (nChunks, maxId, nDocs)
@@ -433,7 +432,7 @@ final class CollectionManager(
 
       // docs: merge WITHIN the dirty buckets only; every other bucket dir is
       // never read, never rewritten (the spec pins them byte-identical)
-      val oldDirtyDocs = spark.read.parquet(docsPath(name))
+      val oldDirtyDocs = Tables.open(spark, docsPath(name))
         .filter(col("bucket").isin(dirty: _*)).drop("bucket")
       val mergedDirtyDocs = oldDirtyDocs
         .join(changedIds, Seq("id"), "left_anti")
@@ -445,7 +444,7 @@ final class CollectionManager(
       // chunks: the removed side (old chunks of changed docs) feeds the
       // incremental BM25 merge; the pruned read touches dirty buckets only
       val changedDocIds = changedIds.select(col("id").as("documentId"))
-      val dirtyChunks = spark.read.parquet(chunksPath(name))
+      val dirtyChunks = Tables.open(spark, chunksPath(name))
         .filter(col("bucket").isin(dirty: _*)).drop("bucket")
       val removedChunkIds = dirtyChunks
         .join(changedDocIds, Seq("documentId"), "left_semi")
@@ -458,7 +457,7 @@ final class CollectionManager(
       // these ids are gone) — the anti-join side would silently empty
       removedChunkIds.count()
       val newChunks = Indexing.buildChunks(
-        spark.read.parquet(docsPath(name))
+        Tables.open(spark, docsPath(name))
           .filter(col("bucket").isin(dirty: _*)).drop("bucket")
           .join(changedIds, Seq("id"), "left_semi"),
         embedder, startId = old.lastIndexItemId + 1)
@@ -476,7 +475,7 @@ final class CollectionManager(
       // same batch-bounded broadcast as the bucketed branch: the stored
       // tables are the big side, the changed-id set never is
       val changedIds = broadcast(changed.select(col("id")).distinct())
-      val oldDocs = spark.read.parquet(docsPath(name))
+      val oldDocs = Tables.open(spark, docsPath(name))
       val mergedDocs = oldDocs
         .join(changedIds, Seq("id"), "left_anti")
         .unionByName(changed)
@@ -487,15 +486,15 @@ final class CollectionManager(
 
       val changedDocIds = changedIds.select(col("id").as("documentId"))
       val newChunks = Indexing.buildChunks(
-        spark.read.parquet(docsPath(name))
+        Tables.open(spark, docsPath(name))
           .join(changedIds, Seq("id"), "left_semi"),
         embedder, startId = old.lastIndexItemId + 1)
-      val removedChunkIds = spark.read.parquet(chunksPath(name))
+      val removedChunkIds = Tables.open(spark, chunksPath(name))
         .join(changedDocIds, Seq("documentId"), "left_semi")
         .select(col("chunkId").as("docId"), col("indexedData"))
         .persist()
       removedChunkIds.count() // materialize BEFORE the swap (see bucketed branch)
-      val keptChunks = spark.read.parquet(chunksPath(name))
+      val keptChunks = Tables.open(spark, chunksPath(name))
         .join(changedDocIds, Seq("documentId"), "left_anti")
       val chunksStaging = s"${chunksPath(name)}__staging"
       keptChunks.select(newChunks.columns.map(col): _*).unionByName(newChunks)
@@ -579,14 +578,15 @@ final class CollectionManager(
     val idDf = broadcast(ids.toDF("id"))
     val docIdDf = idDf.select(col("id").as("documentId"))
 
+    // one collect serves both the removed-chunk read and the bucket rewrite
+    val dirty =
+      if (old.bucketCount > 0) dirtyBuckets(idDf, "id", old.bucketCount) else Nil
     // removed chunk ids for the incremental postings merge — read BEFORE the
     // chunks swap (a lazy read materialized after it would see the new table)
     val removedChunkIds = {
-      val base = spark.read.parquet(chunksPath(name))
+      val base = Tables.open(spark, chunksPath(name))
       val pruned =
-        if (old.bucketCount > 0)
-          base.filter(col("bucket").isin(
-            dirtyBuckets(idDf, "id", old.bucketCount): _*))
+        if (old.bucketCount > 0) base.filter(col("bucket").isin(dirty: _*))
         else base
       pruned.join(docIdDf, Seq("documentId"), "left_semi")
         .select(col("chunkId").as("docId"), col("indexedData")).persist()
@@ -596,28 +596,27 @@ final class CollectionManager(
     if (old.bucketCount > 0) {
       // ---- bucketed layout: rewrite only the buckets holding deleted ids ----
       val n = old.bucketCount
-      val dirty = dirtyBuckets(idDf, "id", n)
-      val keptDirtyDocs = spark.read.parquet(docsPath(name))
+      val keptDirtyDocs = Tables.open(spark, docsPath(name))
         .filter(col("bucket").isin(dirty: _*)).drop("bucket")
         .join(idDf, Seq("id"), "left_anti")
       val docsStaging = s"${docsPath(name)}__staging"
       writeBucketedTable(keptDirtyDocs, "id", n, docsStaging, dirty.size)
       swapBuckets(docsStaging, docsPath(name), dirty)
 
-      val keptDirtyChunks = spark.read.parquet(chunksPath(name))
+      val keptDirtyChunks = Tables.open(spark, chunksPath(name))
         .filter(col("bucket").isin(dirty: _*)).drop("bucket")
         .join(docIdDf, Seq("documentId"), "left_anti")
       val chunksStaging = s"${chunksPath(name)}__staging"
       writeBucketedTable(keptDirtyChunks, "documentId", n, chunksStaging, dirty.size)
       swapBuckets(chunksStaging, chunksPath(name), dirty)
     } else {
-      val keptDocs = spark.read.parquet(docsPath(name))
+      val keptDocs = Tables.open(spark, docsPath(name))
         .join(idDf, Seq("id"), "left_anti")
       val docsStaging = s"${docsPath(name)}__staging"
       keptDocs.write.mode(SaveMode.Overwrite).parquet(docsStaging)
       swap(docsStaging, docsPath(name))
 
-      val keptChunks = spark.read.parquet(chunksPath(name))
+      val keptChunks = Tables.open(spark, chunksPath(name))
         .join(docIdDf, Seq("documentId"), "left_anti")
       val chunksStaging = s"${chunksPath(name)}__staging"
       keptChunks.write.mode(SaveMode.Overwrite).parquet(chunksStaging)
@@ -673,8 +672,8 @@ final class CollectionManager(
   def fsck(name: String): DataFrame = {
     import spark.implicits._
     val m = readManifest(name)
-    val docs = spark.read.parquet(docsPath(name)).select("id")
-    val ch = spark.read.parquet(chunksPath(name)).select("chunkId", "documentId")
+    val docs = Tables.open(spark, docsPath(name)).select("id")
+    val ch = Tables.open(spark, chunksPath(name)).select("chunkId", "documentId")
     val nDocs = docs.count()
     val nChunks = ch.count()
     val maxChunkId = ch.agg(coalesce(max("chunkId"), lit(-1L))).head().getLong(0)
@@ -724,11 +723,11 @@ final class CollectionManager(
         val misbucketed =
           if (malformedDocs == 0L && malformedChunks == 0L) Seq(
             ("misbucketed_documents", 0L,
-              spark.read.parquet(docsPath(name))
+              Tables.open(spark, docsPath(name))
                 .filter(col("bucket") =!= bucketOf(col("id"), m.bucketCount))
                 .count()),
             ("misbucketed_chunks", 0L,
-              spark.read.parquet(chunksPath(name))
+              Tables.open(spark, chunksPath(name))
                 .filter(col("bucket") =!= bucketOf(col("documentId"), m.bucketCount))
                 .count()))
           else Nil
@@ -864,7 +863,7 @@ final class CollectionManager(
     */
   def retrainIvf(name: String): Unit = withWriterLock(name) {
     if (ivfIndex(name).isDefined) {
-      val lists = spark.read.parquet(s"${dir(name)}/indexes/ivf/centroids")
+      val lists = Tables.open(spark, s"${dir(name)}/indexes/ivf/centroids")
         .count().toInt
       buildIvfIndex(name, nLists = lists)
       ()
@@ -874,7 +873,7 @@ final class CollectionManager(
   def reindex(name: String): Unit = withWriterLock(name) {
     bm25Indexer(name).index(this.chunks(name))
     if (ivfIndex(name).isDefined) {
-      val lists = spark.read.parquet(s"${dir(name)}/indexes/ivf/centroids")
+      val lists = Tables.open(spark, s"${dir(name)}/indexes/ivf/centroids")
         .count().toInt // preserve the existing list count
       buildIvfIndex(name, nLists = lists)
     }
@@ -908,9 +907,9 @@ final class CollectionManager(
     * detail and never reaches a consumer (drop is a no-op on flat layouts).
     */
   def chunks(name: String): DataFrame =
-    spark.read.parquet(chunksPath(name)).drop("bucket")
+    Tables.open(spark, chunksPath(name)).drop("bucket")
   def documents(name: String): DataFrame =
-    spark.read.parquet(docsPath(name)).drop("bucket")
+    Tables.open(spark, docsPath(name)).drop("bucket")
 
   /** Indexers available to search, by manifest name. The IVF index joins the
     * registry once built ([[buildIvfIndex]]) — discovery mirrors the reference's

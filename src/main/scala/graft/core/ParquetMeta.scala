@@ -10,7 +10,7 @@ import scala.collection.parallel.CollectionConverters._
 /** Metadata-only parquet statistics — answers "how many rows" from file
   * FOOTERS, without launching a Spark job or touching a data page.
   *
-  * An `Indexer.size` backed by `spark.read.parquet(path).count()` schedules a
+  * An `Indexer.size` backed by a `count()` over the opened table schedules a
   * full scan stage per call; harmless at test scale, wasteful at 100 TB when
   * a search session asks for index sizes. Every parquet footer already
   * carries the exact row count per row group, so the truth is a pure

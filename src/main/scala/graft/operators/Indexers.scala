@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.functions.Embedder
+import graft.core.Tables
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.functions.{size => arraySize}
@@ -52,7 +53,7 @@ final class VectorIndexer(
   def index(chunks: DataFrame): Unit = () // the chunks table itself, written by the manager
   def search(query: String, k: Int, metadataFilter: Option[Column]): DataFrame = {
     requireFilterSupport(metadataFilter)
-    Search.vectorTopK(spark.read.parquet(chunksPath), "embedding",
+    Search.vectorTopK(Tables.open(spark, chunksPath), "embedding",
       embedder.embed(query), k, "l2", metadataFilter)
       .select(col("chunkId"), col("score"))
   }
@@ -62,7 +63,7 @@ final class VectorIndexer(
     // the id semi-join lands before scoring: only gated rows pay the
     // distance expression, and the top-k cuts the gated set
     Search.vectorTopK(
-      spark.read.parquet(chunksPath)
+      Tables.open(spark, chunksPath)
         .join(candidates.select("chunkId"), Seq("chunkId"), "left_semi"),
       "embedding", embedder.embed(query), k, "l2", metadataFilter)
       .select(col("chunkId"), col("score"))
@@ -131,11 +132,6 @@ final class Bm25Indexer(
   private def fsys = new org.apache.hadoop.fs.Path(indexDir)
     .getFileSystem(spark.sparkContext.hadoopConfiguration)
 
-  private def readIf(path: String): Option[DataFrame] =
-    if (fsys.exists(new org.apache.hadoop.fs.Path(path)))
-      Some(spark.read.parquet(path))
-    else None
-
   /** The LOGICAL postings table: base ∪ delta segments ⊖ tombstones. `pre`
     * applies to base and every delta BEFORE the union so a term filter
     * pushes into each segment's pruned parquet scan. The tombstone
@@ -143,10 +139,10 @@ final class Bm25Indexer(
     * [[compact]] keeps it small.
     */
   def postingsTable(pre: DataFrame => DataFrame = identity): DataFrame = {
-    val base = pre(spark.read.parquet(p("postings")))
-    val all = readIf(p("postings_delta"))
+    val base = pre(Tables.open(spark, p("postings")))
+    val all = Tables.openIf(spark, p("postings_delta"))
       .map(d => base.unionByName(pre(d))).getOrElse(base)
-    readIf(p("tombstones"))
+    Tables.openIf(spark, p("tombstones"))
       .map(t => all.join(t.select("docId"), Seq("docId"), "left_anti"))
       .getOrElse(all)
   }
@@ -223,10 +219,10 @@ final class Bm25Indexer(
 
   /** The LOGICAL positional table: base ∪ delta ⊖ (shared) tombstones. */
   def positionsTable(pre: DataFrame => DataFrame = identity): DataFrame = {
-    val base = pre(spark.read.parquet(p("positions")))
-    val all = readIf(p("positions_delta"))
+    val base = pre(Tables.open(spark, p("positions")))
+    val all = Tables.openIf(spark, p("positions_delta"))
       .map(d => base.unionByName(pre(d))).getOrElse(base)
-    readIf(p("tombstones"))
+    Tables.openIf(spark, p("tombstones"))
       .map(t => all.join(t.select("docId"), Seq("docId"), "left_anti"))
       .getOrElse(all)
   }
@@ -238,7 +234,7 @@ final class Bm25Indexer(
     * only ids come back.
     */
   private def filteredIds(f: Column): DataFrame =
-    spark.read.parquet(chunksPath).filter(f).select(col("chunkId").as("docId"))
+    Tables.open(spark, chunksPath).filter(f).select(col("chunkId").as("docId"))
 
   private def applyFilter(hits: DataFrame, f: Option[Column]): DataFrame =
     f.map(c => hits.join(filteredIds(c), Seq("docId"), "left_semi")).getOrElse(hits)
@@ -310,8 +306,8 @@ final class Bm25Indexer(
     * the base is returned as-is (zero extra plan nodes on a compacted index).
     */
   def termDfTable(pre: DataFrame => DataFrame = identity): DataFrame = {
-    val base = pre(spark.read.parquet(p("termDf")))
-    readIf(p("termDf_delta")) match {
+    val base = pre(Tables.open(spark, p("termDf")))
+    Tables.openIf(spark, p("termDf_delta")) match {
       case Some(delta) => base.select("term", "df")
         .unionByName(pre(delta).select("term", "df"))
         .groupBy("term").agg(sum("df").as("df"))
@@ -327,8 +323,8 @@ final class Bm25Indexer(
     * (the delta path refuses to start from it) and reads unchanged.
     */
   def corpusStats(): DataFrame = {
-    val base = spark.read.parquet(p("corpus"))
-    readIf(p("corpus_delta")) match {
+    val base = Tables.open(spark, p("corpus"))
+    Tables.openIf(spark, p("corpus_delta")) match {
       case Some(delta) => base.select(col("n"), col("totalLen"))
         .unionByName(delta.select("n", "totalLen"))
         .agg(sum("n").as("n"), sum("totalLen").as("totalLen"))
@@ -474,7 +470,7 @@ final class Bm25Indexer(
     removedChunks.select(col("docId"))
       .write.mode(SaveMode.Append).parquet(p("tombstones"))
     val deltaCapable = removedChunks.columns.contains("indexedData") &&
-      spark.read.parquet(p("corpus")).columns.contains("totalLen")
+      Tables.open(spark, p("corpus")).columns.contains("totalLen")
     // the batch's signed df delta, kept in hand when the delta path ran —
     // the suggest-key maintenance below re-uses it instead of paying its own
     // distinct over the batch postings
@@ -717,8 +713,8 @@ final class Bm25Indexer(
 
   /** The LOGICAL delete-key table: base ∪ update-appended delta segments. */
   private def suggestKeysTable(): DataFrame = {
-    val base = spark.read.parquet(p("suggest_keys"))
-    readIf(p("suggest_keys_delta")).map(base.unionByName(_)).getOrElse(base)
+    val base = Tables.open(spark, p("suggest_keys"))
+    Tables.openIf(spark, p("suggest_keys_delta")).map(base.unionByName(_)).getOrElse(base)
   }
 
   /** Spelling suggestions for `queryTerms` against the index vocabulary,
@@ -785,7 +781,7 @@ final class Bm25Indexer(
       _.filter(col("term").isin(terms: _*))) // pushed into each segment's pruned scan
     val postings1 = metadataFilter match {
       case Some(f) => postings0.join( // pre-filtered search via id semi-join
-        spark.read.parquet(chunksPath).filter(f).select(col("chunkId").as("docId")),
+        Tables.open(spark, chunksPath).filter(f).select(col("chunkId").as("docId")),
         Seq("docId"), "left_semi")
       case None => postings0
     }
@@ -1020,11 +1016,10 @@ final class IvfVectorIndexer(
     * tail, [[compact]] keeps it small).
     */
   def assignedTable(pre: DataFrame => DataFrame = identity): DataFrame = {
-    val base = pre(spark.read.parquet(assignedPath))
-    if (fsys.exists(new org.apache.hadoop.fs.Path(tombstonesPath)))
-      base.join(spark.read.parquet(tombstonesPath).select("chunkId"),
-        Seq("chunkId"), "left_anti")
-    else base
+    val base = pre(Tables.open(spark, assignedPath))
+    Tables.openIf(spark, tombstonesPath)
+      .map(t => base.join(t.select("chunkId"), Seq("chunkId"), "left_anti"))
+      .getOrElse(base)
   }
 
   def index(chunks: DataFrame): Unit = {
@@ -1080,7 +1075,7 @@ final class IvfVectorIndexer(
     */
   def listSizeDrift: Option[Double] = {
     if (!fsys.exists(new org.apache.hadoop.fs.Path(trainStatsPath))) return None
-    val train = spark.read.parquet(trainStatsPath).collect()
+    val train = Tables.open(spark, trainStatsPath).collect()
       .map(r => r.getInt(0) -> r.getLong(1)).toMap
     val now = listCounts()
     val (tTot, nTot) = (train.values.sum.toDouble, now.values.sum.toDouble)
@@ -1091,7 +1086,7 @@ final class IvfVectorIndexer(
   }
 
   private def centroids(): Array[(Int, Array[Float])] =
-    spark.read.parquet(centroidsPath).collect()
+    Tables.open(spark, centroidsPath).collect()
       .map(r => r.getInt(0) -> r.getSeq[Float](1).toArray)
 
   /** Incrementally add chunks to an EXISTING index: assign against the

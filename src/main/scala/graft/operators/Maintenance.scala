@@ -1,5 +1,6 @@
 package graft.operators
 
+import graft.core.Tables
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
@@ -84,7 +85,7 @@ object Maintenance {
     val staging = new Path(target.getParent, "." + target.getName + "__compact")
     val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(staging)) fs.delete(staging, true)
-    spark.read.parquet(path).coalesce(nOut)
+    Tables.open(spark, path).coalesce(nOut)
       .write.mode("overwrite").parquet(staging.toString)
     val backup = new Path(target.getParent, "." + target.getName + "__old")
     if (fs.exists(backup)) fs.delete(backup, true)

@@ -266,15 +266,14 @@ object TextAnalysis {
     // interpreted transform lambda (same pairs — tokens carry no spaces).
     // NOT spread: both consumers aggregate immediately, and the measured
     // exchange cost exceeded the map win (r17 A/B: 0.81 → 1.20 s spread)
-    val spreadDocs = docs
-    val pairs = spreadDocs
+    val pairs = docs
       .select(toksCol(textCol).as("_t"))
       .select(explode(graft.plans.SuffixSeedFunctions
         .joinedTokenWindows(col("_t"), 2, shortFallback = false)).as("bg"))
       .select(substring_index(col("bg"), " ", 1).as("w1"),
         substring_index(col("bg"), " ", -1).as("w2"))
     val bigramCounts = pairs.groupBy("w1", "w2").agg(count(lit(1)).as("c_ab"))
-    val unigramCounts = spreadDocs
+    val unigramCounts = docs
       .select(explode(toksCol(textCol)).as("w"))
       .groupBy("w").agg(count(lit(1)).as("c_w"))
     val total = bigramCounts.agg(sum("c_ab").as("n_total"))

@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.core.Tables
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.hadoop.fs.Path
 import java.nio.charset.StandardCharsets
@@ -35,7 +36,7 @@ final class CachedSource(spark: SparkSession, cacheDir: String) {
     if (!isCached(config)) {
       source.write.mode(SaveMode.Overwrite).parquet(path(config))
     }
-    spark.read.parquet(path(config))
+    Tables.open(spark, path(config))
   }
 
   def invalidate(config: String): Unit = {
