@@ -1,11 +1,28 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import graft.core.{JobMeter, Measurement}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Benchmark main: runs every registered query on SPARK_GRAFT_SF_DIR and prints
-  * one JSON line with per-query steady-state seconds. A full warmup pass runs
-  * first (JIT + codegen + parquet footer caches), then the timed pass — the
-  * number that matters at scale is steady-state scan/shuffle throughput, not
-  * first-query JVM warmup.
+/** The measurement entry point: one session setup, three modes.
+  *
+  *  - `runMain graft.Bench` — the timed board. Runs every registered query on
+  *    SPARK_GRAFT_SF_DIR: a full warmup pass first (JIT + codegen + parquet
+  *    footer caches), then two timed passes keeping the per-query minimum —
+  *    the number that matters at scale is steady-state scan/shuffle
+  *    throughput, not first-query JVM warmup. The full JSON record goes to
+  *    SPARK_GRAFT_BENCH_OUT (default bench_out.json); stdout ends with one
+  *    compact summary line.
+  *  - `runMain graft.Bench jobs` — structural metrics, which host CPU steal
+  *    cannot move. Per query: one warm execution, then the DataFrame is built
+  *    under one [[JobMeter]] block and consumed under another. Writes
+  *    `{build_s, build_jobs, sec, jobs, tasks, shuffle_mb}` per query to
+  *    SPARK_GRAFT_BENCH_OUT (default bench_jobs.json): `build_*` cover the
+  *    build alone, the rest build + consume. Prints every job of the query
+  *    (duration, gap since the previous job, tasks, call site) to stdout.
+  *  - `runMain graft.Bench explain <names…>` — the formatted physical plan of
+  *    each named query.
+  *
+  * SPARK_GRAFT_BENCH_FILTER, a query-name regex, narrows the board and `jobs`
+  * to a few rows for targeted re-measurement; unset, every row runs.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -26,17 +43,46 @@ object Bench {
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     SparkEntry.configure(spark)
+    try args.toList match {
+      case Nil => board(spark, sfDir)
+      case List("jobs") => jobs(spark, sfDir)
+      case "explain" :: names if names.nonEmpty => names.foreach { name =>
+        println(s"========== $name ==========")
+        SparkEntry.queries(name)(spark, sfDir).explain("formatted")
+      }
+      case _ => throw new IllegalArgumentException(
+        s"usage: graft.Bench [jobs | explain <query>…]; got: ${args.mkString(" ")}")
+    } finally spark.stop()
+  }
 
-    // Consume via the noop sink, not count(): count() lets Catalyst prune every
-    // projection it doesn't need, so map-only queries would time as near-free.
-    // The noop writer materializes every output row in full, then discards it.
-    def consume(df: org.apache.spark.sql.DataFrame): Unit =
-      df.write.format("noop").mode("overwrite").save()
-    // Optional name-filter regex (SPARK_GRAFT_BENCH_FILTER) for targeted
-    // re-measurement of a few queries; the driver sets no filter → full run.
+  // Consume via the noop sink, not count(): count() lets Catalyst prune every
+  // projection it doesn't need, so map-only queries would time as near-free.
+  // The noop writer materializes every output row in full, then discards it.
+  private def consume(df: DataFrame): Unit =
+    df.write.format("noop").mode("overwrite").save()
+
+  private def selected: Seq[(String, (SparkSession, String) => DataFrame)] = {
     val nameFilter = sys.env.get("SPARK_GRAFT_BENCH_FILTER").map(_.r)
-    val queries = SparkEntry.queries.toSeq.sortBy(_._1)
+    SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (n, _) => nameFilter.forall(_.matches(n)) }
+  }
+
+  // Millisecond precision keeps the JSON records short.
+  private def fmt(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
+
+  private def jstr(s: String): String =
+    "\"" + s.flatMap { case '"' => "\\\""; case '\\' => "\\\\"
+                       case c if c < ' ' => " "; case c => c.toString } + "\""
+
+  private def writeOut(defaultPath: String, json: String): String = {
+    val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", defaultPath)
+    java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
+      (json + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    outPath
+  }
+
+  private def board(spark: SparkSession, sfDir: String): Unit = {
+    val queries = selected
     // Pass-boundary wall stamps on stderr: the r16 driver run timed out
     // (rc=124) with no visibility into WHERE the wall went; these lines cost
     // nothing and make any future timeout diagnosable from the log tail.
@@ -144,10 +190,6 @@ object Bench {
     // outside the clamp means the pins need re-calibration, not trusting
     val hostFactor =
       math.max(0.25, math.min(1.0, shortjobsPin / math.max(ctlShort, 1e-9)))
-    // Millisecond precision keeps the JSON line short enough to survive the
-    // driver's fixed-size stdout-tail capture (BENCH_r06's full-precision
-    // doubles pushed the line past the window and left `parsed` null).
-    def fmt(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
     val qs = results.map { case (k, v) => "\"" + k + "\":" + fmt(v) }
       .mkString("{", ",", "}")
     val total = results.map(_._2).sum
@@ -160,20 +202,55 @@ object Bench {
       s""""scan_pin":${fmt(scanPin)},"shortjobs_pin":${fmt(shortjobsPin)},""" +
       s""""host_factor":${fmt(hostFactor)},"host_factor_scan":${fmt(hostFactorScan)}}"""
     val normalized = s"""{"total":${fmt(total * hostFactor)}}"""
-    def jstr(s: String): String =
-      "\"" + s.flatMap { case '"' => "\\\""; case '\\' => "\\\\"
-                         case c if c < ' ' => " "; case c => c.toString } + "\""
     val errJson =
       if (errors.isEmpty) ""
       else errors.map { case (k, v) => jstr(k) + ":" + jstr(v) }
         .mkString(""","errors":{""", ",", "}")
-    val json = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"control":$control,"normalized":$normalized$errJson,"sf":"$sfDir"}"""
-    println(json)
-    // Also write the JSON to a file: scraping it from the sbt log tail is
-    // fragile (log interleaving left BENCH_r02's parsed field null).
-    val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
-    java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
-      (json + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    spark.stop()
+    val json = s"""{"metric":"total","value":${fmt(total)},"unit":"sec","queries":$qs,"control":$control,"normalized":$normalized$errJson,"sf":${jstr(sfDir)},"warmup":${jstr(warmupDir)}}"""
+    // The full record goes to a file: scraping it from the sbt log tail is
+    // fragile (log interleaving left BENCH_r02's parsed field null), and at
+    // ~4.5 KB it overflows a ~2,000-character stdout-tail capture (BENCH_r15
+    // and r17 `parsed: null`). Stdout ends with a compact summary instead.
+    val outPath = writeOut("bench_out.json", json)
+    println(s"""{"metric":"total","value":${fmt(total)},"unit":"sec","n":${results.size},""" +
+      s""""errors":${errors.size},"normalized":$normalized,"warmup":${jstr(warmupDir)},""" +
+      s""""out":${jstr(outPath)}}""")
+  }
+
+  private def jobs(spark: SparkSession, sfDir: String): Unit = {
+    val rows = selected.flatMap { case (name, fn) =>
+      try {
+        consume(fn(spark, sfDir)) // warm: JIT, codegen, footer caches
+        var df: DataFrame = null
+        val build = JobMeter.measure(spark) { df = fn(spark, sfDir) }
+        val run = JobMeter.measure(spark)(consume(df))
+        val (sec, nJobs) = (build.wallS + run.wallS, build.jobs + run.jobs)
+        val tasks = build.tasks + run.tasks
+        val shuffleMb = (build.shuffleWriteBytes + run.shuffleWriteBytes) / 1e6
+        println(s"== $name build=${fmt(build.wallS)}s build_jobs=${build.jobs} " +
+          s"sec=${fmt(sec)} jobs=$nJobs tasks=$tasks shuffleMB=${fmt(shuffleMb)}")
+        printJobs("build", build); printJobs("run", run)
+        Some(s"""${jstr(name)}:{"build_s":${fmt(build.wallS)},"build_jobs":${build.jobs},""" +
+          s""""sec":${fmt(sec)},"jobs":$nJobs,"tasks":$tasks,"shuffle_mb":${fmt(shuffleMb)}}""")
+      } catch { case e: Throwable =>
+        System.err.println(s"BENCH JOBS ERROR $name — ${e.getClass.getSimpleName}: " +
+          Option(e.getMessage).getOrElse("").take(200))
+        None
+      }
+    }
+    writeOut("bench_jobs.json", rows.mkString("{", ",", "}"))
+  }
+
+  /** One line per job: wall, idle gap since the previous job ended (planning
+    * and other work between jobs), planned tasks, call site.
+    */
+  private def printJobs(phase: String, m: Measurement): Unit = {
+    var prevEnd = 0L
+    m.records.foreach { j =>
+      val gap = if (prevEnd == 0) 0.0 else (j.start - prevEnd) / 1e3
+      prevEnd = math.max(prevEnd, j.end)
+      println(f"  $phase%-5s job ${j.id}%4d dur=${(j.end - j.start) / 1e3}%7.3fs " +
+        f"gap=$gap%7.3fs tasks=${j.tasks}%4d ${j.site}")
+    }
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import graft.core.CollectionManager
+import graft.core.{CollectionManager, JobMeter}
 import graft.functions.{HashingEmbedder, TextSplitter}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -337,29 +337,10 @@ class CollectionsSpec extends AnyFunSuite with SparkSuite {
     cm.appendMinhashSigs("sr", Seq(("d1", "first text")).toDF("id", "text"))
     cm.appendMinhashSigs("sr", Seq(("d2", "second text")).toDF("id", "text"))
 
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    def barrier(atLeast: Int): Unit = {
-      spark.sparkContext.parallelize(Seq(1), 1).count()
-      val deadline = System.nanoTime() + 5000000000L
-      while (jobs.get() < atLeast && System.nanoTime() < deadline) Thread.sleep(20)
-      var last = -1
-      while (last != jobs.get()) { last = jobs.get(); Thread.sleep(500) }
-    }
-    try {
-      barrier(1); jobs.set(0)
-      // the rev counter a streaming batch pays on EVERY gated tick: must be
-      // a metadata read (footer max), never an O(history) scan job
-      assert(cm.nextSigRev("sr") === 2L)
-      barrier(1)
-      assert(jobs.get() === 1,
-        s"nextSigRev must not schedule Spark jobs; saw ${jobs.get() - 1} extra")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    // the rev counter a streaming batch pays on EVERY gated tick: must be
+    // a metadata read (footer max), never an O(history) scan job
+    val jobs = JobMeter.measure(spark)(assert(cm.nextSigRev("sr") === 2L)).jobs
+    assert(jobs === 0, s"nextSigRev must not schedule Spark jobs; saw $jobs")
   }
 
   // ------------------------------------------------------- bucketed layout
@@ -520,27 +501,8 @@ class CollectionsSpec extends AnyFunSuite with SparkSuite {
 
     // zero jobs: the refresh that runs after EVERY update/delete tick must be
     // a metadata read, not an O(corpus) scan (the A3 listener proof)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    def barrier(atLeast: Int): Unit = {
-      spark.sparkContext.parallelize(Seq(1), 1).count()
-      val deadline = System.nanoTime() + 5000000000L
-      while (jobs.get() < atLeast && System.nanoTime() < deadline) Thread.sleep(20)
-      var last = -1
-      while (last != jobs.get()) { last = jobs.get(); Thread.sleep(500) }
-    }
-    try {
-      barrier(1); jobs.set(0)
-      cmF.manifestStats("ms"); cmB.manifestStats("ms")
-      barrier(1)
-      assert(jobs.get() === 1,
-        s"manifestStats must not schedule Spark jobs; saw ${jobs.get() - 1} extra")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    val jobs = JobMeter.measure(spark) { cmF.manifestStats("ms"); cmB.manifestStats("ms") }.jobs
+    assert(jobs === 0, s"manifestStats must not schedule Spark jobs; saw $jobs")
   }
 
   test("chunk-id HWM survives an update that removes the top ids without adding any") {

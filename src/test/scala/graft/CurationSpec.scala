@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
+import graft.core.JobMeter
 import graft.operators.Curation
 
 /** Curation operators on crafted inputs (the registered queries hash-gate them
@@ -207,29 +208,12 @@ class CurationSpec extends AnyFunSuite with SparkSuite {
     // possible construction-time job is the drop-stats action itself
     def pairs(stats: Boolean) = graft.operators.Dedup.containmentPairs(
       docs, "doc_id", "text", maxFingerprintDf = 2, logDropStats = stats)
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    def quiesce(): Unit = {
-      spark.sparkContext.parallelize(Seq(1), 1).count()
-      var last = -1
-      while (last != jobs.get()) { last = jobs.get(); Thread.sleep(500) }
-    }
-    val (loud, quiet) =
-      try {
-        quiesce(); jobs.set(0)
-        val q = pairs(stats = false) // construction only — no action yet
-        quiesce()
-        // the barrier count itself is the 1; anything beyond it ran eagerly
-        assert(jobs.get() === 1,
-          s"logDropStats=false must not schedule jobs at plan construction; saw ${jobs.get() - 1}")
-        val l = pairs(stats = true)
-        (l, q)
-      } finally spark.sparkContext.removeSparkListener(listener)
+    var quiet: org.apache.spark.sql.DataFrame = null
+    // construction only — no action yet
+    val jobs = JobMeter.measure(spark) { quiet = pairs(stats = false) }.jobs
+    assert(jobs === 0,
+      s"logDropStats=false must not schedule jobs at plan construction; saw $jobs")
+    val loud = pairs(stats = true)
     def key(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getAs[Long]("id_a"), r.getAs[Long]("id_b"), r.getAs[Long]("shared")))
       .toSet

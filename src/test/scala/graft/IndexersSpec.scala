@@ -1,6 +1,6 @@
 package graft
 
-import graft.core.CollectionManager
+import graft.core.{CollectionManager, JobMeter}
 import graft.functions.{HashingEmbedder, TextSplitter}
 import graft.operators.{Bm25Indexer, Indexers, Search, VectorIndexer}
 import org.apache.spark.sql.functions._
@@ -105,36 +105,12 @@ class IndexersSpec extends AnyFunSuite with SparkSuite {
     val (cm, _, dir) = setup()
     val ivf = cm.buildIvfIndex("ix", nLists = 4, nProbe = 4)
     val flat = new VectorIndexer(spark, s"$dir/chunks", new HashingEmbedder(dim = 16))
-    val expected = cm.chunks("ix").count() // job happens BEFORE the listener attaches
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    def barrier(atLeast: Int): Unit = {
-      // an RDD count is exactly ONE job (no AQE sub-jobs, unlike a SQL count)
-      spark.sparkContext.parallelize(Seq(1), 1).count()
-      val deadline = System.nanoTime() + 5000000000L
-      while (jobs.get() < atLeast && System.nanoTime() < deadline) Thread.sleep(20)
-      // then wait for the bus to go quiet: no new deliveries for 500 ms
-      var last = -1
-      while (last != jobs.get()) { last = jobs.get(); Thread.sleep(500) }
-    }
-    try {
-      // The async bus may still deliver queued events from setup jobs to a
-      // freshly attached listener — flush them behind a first barrier job,
-      // then zero the counter so only what follows is measured.
-      barrier(1); jobs.set(0)
+    val expected = cm.chunks("ix").count() // counted before the measured block
+    val jobs = JobMeter.measure(spark) {
       assert(flat.size === expected)
       assert(ivf.size === expected)
-      // The bus is FIFO: once this second barrier's start event is observed,
-      // any job a size() call had scheduled would already be counted.
-      barrier(1)
-      assert(jobs.get() === 1,
-        s"size() must not schedule Spark jobs; saw ${jobs.get() - 1} extra")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }.jobs
+    assert(jobs === 0, s"size() must not schedule Spark jobs; saw $jobs")
   }
 
   test("Indexer.size ignores _temporary debris a crashed write leaves behind") {

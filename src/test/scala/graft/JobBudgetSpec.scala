@@ -1,11 +1,10 @@
 package graft
 
-import graft.core.CollectionManager
+import graft.core.{CollectionManager, JobMeter}
 import graft.functions.{HashingEmbedder, TextSplitter}
 import graft.streaming.StreamingUpdate
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.scalatest.funsuite.AnyFunSuite
 import java.nio.file.Files
 
@@ -25,19 +24,7 @@ import java.nio.file.Files
   */
 class JobBudgetSpec extends AnyFunSuite with SparkSuite {
 
-  private def countJobs(body: => Unit): Int = {
-    val n = new java.util.concurrent.atomic.AtomicInteger(0)
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit = n.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    // deterministic drain: a fixed sleep can under-count on a loaded host
-    // (budgets would pass too easily); waitUntilEmpty blocks until every
-    // queued listener event has been delivered
-    try { body; org.apache.spark.GraftListenerBus.waitUntilEmpty(spark.sparkContext) }
-    finally spark.sparkContext.removeSparkListener(listener)
-    n.get()
-  }
+  private def countJobs(body: => Any): Int = JobMeter.measure(spark)(body).jobs
 
   private def mkDocs(rows: (String, String)*) = {
     import spark.implicits._

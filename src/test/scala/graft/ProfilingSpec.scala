@@ -1,5 +1,6 @@
 package graft
 
+import graft.core.JobMeter
 import graft.operators.Profiling
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -15,14 +16,7 @@ class ProfilingSpec extends AnyFunSuite with SparkSuite {
       .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2), r.getLong(3)))
     assert(out.toSeq === Seq(("k", 3L, 2L, 2L), ("v", 3L, 2L, 2L)))
     // the whole profile is ONE aggregation job regardless of column count
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val l = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(j: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(l)
-    try { Profiling.profile(df, Seq("k", "v")).count(); Thread.sleep(300) }
-    finally spark.sparkContext.removeSparkListener(l)
-    assert(jobs.get() <= 6, s"profiling fanned out into per-column scans: ${jobs.get()} jobs")
+    val jobs = JobMeter.measure(spark)(Profiling.profile(df, Seq("k", "v")).count()).jobs
+    assert(jobs <= 6, s"profiling fanned out into per-column scans: $jobs jobs")
   }
 }
