@@ -25,9 +25,11 @@ import java.nio.charset.StandardCharsets
   * chunk-id sequence continuing past the manifest's high-water mark (`lastIndexItemId`
   * — creator.py:125-136, :187-188).
   *
-  * Scale: documents and chunks tables partition by id hash at write; search touches
-  * only the chunks table (scan + top-k); update rewrites only the chunks of changed
-  * documents' partitions via anti-join union (Delta MERGE semantics on plain Parquet).
+  * Scale: search touches only the chunks table (scan + top-k). Update and delete
+  * are one anti-join + union rewrite (Delta MERGE semantics on plain Parquet): the
+  * default flat layout rewrites both tables whole; the bucketed layout
+  * (`create(nBuckets = n)`) partitions both by document-id hash and rewrites only
+  * the buckets holding changed documents.
   */
 final class CollectionManager(
     spark: SparkSession,
@@ -40,6 +42,7 @@ final class CollectionManager(
   private def chunksPath(name: String) = s"${dir(name)}/chunks"
   private def manifestPath(name: String) = s"${dir(name)}/manifest.json"
   private def bm25Dir(name: String) = s"${dir(name)}/indexes/bm25"
+  private def ivfDir(name: String) = s"${dir(name)}/indexes/ivf"
   private def lockPath(name: String) = new Path(s"${dir(name)}/_writer.lock")
 
   // ------------------------------------------------------------ writer lock
@@ -79,7 +82,7 @@ final class CollectionManager(
                     deterministic: Boolean = false): graft.operators.IvfVectorIndexer =
     withWriterLock(name) {
       val ivf = new graft.operators.IvfVectorIndexer(
-        spark, s"${dir(name)}/indexes/ivf", embedder, nLists, nProbe,
+        spark, ivfDir(name), embedder, nLists, nProbe,
         deterministic = deterministic)
       ivf.index(chunks(name))
       ivf
@@ -88,12 +91,10 @@ final class CollectionManager(
   /** The collection's IVF index, when one has been built — the handle
     * streaming per-batch appends use ([[graft.streaming.StreamingUpdate]]).
     */
-  def ivfIndex(name: String): Option[graft.operators.IvfVectorIndexer] = {
-    val ivfDir = s"${dir(name)}/indexes/ivf"
-    if (fs.exists(new Path(s"$ivfDir/centroids")))
-      Some(new graft.operators.IvfVectorIndexer(spark, ivfDir, embedder))
+  def ivfIndex(name: String): Option[graft.operators.IvfVectorIndexer] =
+    if (fs.exists(new Path(s"${ivfDir(name)}/centroids")))
+      Some(new graft.operators.IvfVectorIndexer(spark, ivfDir(name), embedder))
     else None
-  }
 
   private def sigsPath(name: String) = s"${dir(name)}/indexes/minhash_sigs"
 
@@ -144,10 +145,10 @@ final class CollectionManager(
       case None =>
         val raw = Tables.open(spark, sigsPath(name))
         if (!raw.columns.contains("rev")) {
-          val staging = s"${sigsPath(name)}__staging"
-          raw.withColumn("rev", lit(0L)).withColumn("deleted", lit(false))
-            .write.mode(SaveMode.Overwrite).parquet(staging)
-          swap(staging, sigsPath(name))
+          Tables.replace(spark, sigsPath(name)) { staging =>
+            raw.withColumn("rev", lit(0L)).withColumn("deleted", lit(false))
+              .write.mode(SaveMode.Overwrite).parquet(staging)
+          }
           1L
         } else
           raw.agg(coalesce(max("rev"), lit(-1L))).head().getLong(0) + 1L
@@ -171,10 +172,6 @@ final class CollectionManager(
       .write.mode("append").parquet(sigsPath(name))
   }
 
-  /** Fold the signature table's revision history into one live row per id
-    * (rev reset to 0) — bounds the reader's argmax input and the file count
-    * accreted by per-batch appends. Values unchanged by construction.
-    */
   /** Total bytes of the signature table — the fold-or-not signal for the
     * streaming writer (listing only; after a fold this IS the live-row size,
     * so comparing against a budget bounds history growth to ~budget).
@@ -184,12 +181,16 @@ final class CollectionManager(
     if (fs.exists(p)) fs.getContentSummary(p).getLength else 0L
   }
 
+  /** Fold the signature table's revision history into one live row per id
+    * (rev reset to 0) — bounds the reader's argmax input and the file count
+    * accreted by per-batch appends. Values unchanged by construction.
+    */
   def compactSigs(name: String): Unit = withWriterLock(name) {
     minhashSigs(name).foreach { live =>
-      val staging = s"${sigsPath(name)}__staging"
-      live.withColumn("rev", lit(0L)).withColumn("deleted", lit(false))
-        .write.mode(SaveMode.Overwrite).parquet(staging)
-      swap(staging, sigsPath(name))
+      Tables.replace(spark, sigsPath(name)) { staging =>
+        live.withColumn("rev", lit(0L)).withColumn("deleted", lit(false))
+          .write.mode(SaveMode.Overwrite).parquet(staging)
+      }
     }
   }
 
@@ -295,18 +296,42 @@ final class CollectionManager(
     dirty.foreach { k =>
       val s = new Path(s"$stagingRoot/bucket=$k")
       val t = new Path(s"$targetRoot/bucket=$k")
-      if (fs.exists(s)) swap(s.toString, t.toString)
+      if (fs.exists(s)) Tables.swap(spark, s.toString, t.toString)
       else if (fs.exists(t)) fs.delete(t, true)
     }
     fs.delete(new Path(stagingRoot), true) // _SUCCESS + any empty residue
   }
 
-  /** The dirty-bucket ids of a set of document ids — bounded by bucketCount
-    * by construction, so the collect is a ≤ n-int driver list, never data.
+  /** The dirty-bucket ids of a set of document ids (`id` column) on an
+    * `n`-bucket layout — bounded by n by construction, so the collect is a
+    * ≤ n-int driver list, never data. The flat layout (n = 0) has no
+    * buckets and runs no job here.
     */
-  private def dirtyBuckets(ids: DataFrame, idCol: String, n: Int): Seq[Int] =
-    ids.select(bucketOf(col(idCol), n).as("b")).distinct()
+  private def dirtyBuckets(ids: DataFrame, n: Int): Seq[Int] =
+    if (n == 0) Nil
+    else ids.select(bucketOf(col("id"), n).as("b")).distinct()
       .collect().map(_.getInt(0)).toSeq.sorted
+
+  /** The rows of the table at `path` that a mutation rewrites: the whole
+    * table on the flat layout (n = 0), else only the `dirty` bucket dirs
+    * (pruned by `PartitionFilters`), with the derived `bucket` column dropped.
+    */
+  private def live(path: String, n: Int, dirty: Seq[Int]): DataFrame =
+    if (n == 0) Tables.open(spark, path)
+    else Tables.open(spark, path).filter(col("bucket").isin(dirty: _*)).drop("bucket")
+
+  /** Write `df` back over what [[live]] read: a staged rewrite of the whole
+    * table on the flat layout, else the `dirty` buckets staged and swapped
+    * in one by one — every other bucket dir is never read, never rewritten.
+    */
+  private def put(df: DataFrame, keyCol: String, path: String, n: Int,
+                  dirty: Seq[Int]): Unit =
+    if (n == 0) Tables.replace(spark, path)(df.write.mode(SaveMode.Overwrite).parquet(_))
+    else {
+      val staging = s"${path}__staging"
+      writeBucketedTable(df, keyCol, n, staging, dirty.size)
+      swapBuckets(staging, path, dirty)
+    }
 
   /** Create (or overwrite) a collection from raw documents. Converter-built
     * chunks (header semantics, per-page metadata) are kept as-is; the splitter
@@ -383,9 +408,6 @@ final class CollectionManager(
     (nChunks, maxId, nDocs)
   }
 
-  /** Incremental update: re-read documents replace their old rows (and chunks) by
-    * anti-join; new chunk ids continue after the manifest high-water mark.
-    */
   private def withChunks(rawDocs: DataFrame): DataFrame =
     if (rawDocs.columns.contains("chunks")) rawDocs
     else Indexing.splitDocuments(rawDocs, splitter)
@@ -402,6 +424,74 @@ final class CollectionManager(
         s"uses '${embedder.name}' — construct the CollectionManager with the matching embedder")
   }
 
+  /** The one mutation body behind [[update]] and [[delete]]: the documents
+    * with an id in `ids` (a broadcast `id` frame — bounded by the batch,
+    * never by the corpus, so every merge join is a broadcast hash join
+    * against the stored tables) leave both tables, and the `added` rows, if
+    * any, take their place with chunk ids continuing past the manifest
+    * high-water mark. On the bucketed layout only the dirty buckets are
+    * read and rewritten ([[live]] / [[put]]). BM25 merges incrementally; a
+    * built IVF index tombstones the removed chunk ids and, when `refreshIvf`,
+    * assigns the added chunks. Returns the footer-read manifest counters.
+    */
+  private def rewrite(name: String, old: Model.Manifest, ids: DataFrame,
+                      added: Option[DataFrame], refreshIvf: Boolean): (Long, Long, Long) = {
+    val n = old.bucketCount
+    val docIds = ids.select(col("id").as("documentId"))
+    val dirty = dirtyBuckets(ids, n)
+    // the removed chunks feed the incremental BM25 merge; indexedData rides
+    // along so it can tokenize the REMOVED side for O(changed) df decrements
+    // instead of re-scanning the corpus. MATERIALIZE before any swap: the
+    // plan reads chunksPath, and a lazy first action after the swap would see
+    // the post-swap table (where these ids are gone)
+    val removed = live(chunksPath(name), n, dirty)
+      .join(docIds, Seq("documentId"), "left_semi")
+      .select(col("chunkId").as("docId"), col("indexedData"))
+      .persist()
+    removed.count()
+
+    val keptDocs = live(docsPath(name), n, dirty).join(ids, Seq("id"), "left_anti")
+    put(added.fold(keptDocs)(keptDocs.unionByName(_)), "id", docsPath(name), n, dirty)
+
+    val keptChunks = live(chunksPath(name), n, dirty)
+      .join(docIds, Seq("documentId"), "left_anti")
+    val chunks = if (added.isEmpty) keptChunks else {
+      // the batch's chunks, built from its documents as just written
+      val built = Indexing.buildChunks(
+        live(docsPath(name), n, dirty).join(ids, Seq("id"), "left_semi"),
+        embedder, startId = old.lastIndexItemId + 1)
+      keptChunks.select(built.columns.map(col): _*).unionByName(built)
+    }
+    put(chunks, "documentId", chunksPath(name), n, dirty)
+
+    // BM25: incremental postings merge — the removed chunks' postings
+    // tombstone out, tokenization (the dominant shuffle: explode over every
+    // token of every doc) runs over the NEW chunks only
+    val addedChunks = added.map(_ =>
+      this.chunks(name).join(docIds, Seq("documentId"), "left_semi"))
+    bm25Indexer(name).updateIncremental(removed,
+      addedChunks.getOrElse(this.chunks(name).limit(0)))
+    // IVF follows the same incremental shape: tombstone the removed chunk
+    // ids ALWAYS (otherwise vector_ivf keeps serving them; every tombstone
+    // kills exactly one assigned row, since `removed` came from the live
+    // chunks table), assign the new chunks against the frozen centroids when
+    // this call owns the refresh. Streaming callers pass refreshIvf = false
+    // and APPEND the batch's chunks themselves (StreamingUpdate) — assigning
+    // here too would double-index every batch.
+    ivfIndex(name).foreach { ivf =>
+      val removedAsChunk = removed.select(col("docId").as("chunkId"))
+      addedChunks match {
+        case Some(nc) if refreshIvf => ivf.refreshIncremental(removedAsChunk, nc)
+        case _ => ivf.removeIds(removedAsChunk)
+      }
+    }
+    removed.unpersist()
+    manifestStats(name)
+  }
+
+  /** Incremental update: re-read documents replace their old rows (and chunks) by
+    * anti-join; new chunk ids continue after the manifest high-water mark.
+    */
   def update(name: String, changedRawDocs: DataFrame,
              refreshIvf: Boolean = true): Model.Manifest = withWriterLock(name) {
     val old = readManifest(name)
@@ -419,114 +509,8 @@ final class CollectionManager(
         max(element_at(col("metadata"), "lastModifiedAt")).as("lm"))
       case None => changedPlain
     }
-
-    val removedAndChanged = if (old.bucketCount > 0) {
-      // ---- bucketed layout: touch only the buckets holding changed docs ----
-      val n = old.bucketCount
-      // the changed-id set is bounded by the UPDATE BATCH (the caller feeds
-      // reader batches, reference contract ≤500k docs), never by the corpus —
-      // broadcast it so every merge join below is a broadcast hash join
-      // against the (huge) stored tables instead of shuffling them
-      val changedIds = broadcast(changed.select(col("id")).distinct())
-      val dirty = dirtyBuckets(changedIds, "id", n)
-
-      // docs: merge WITHIN the dirty buckets only; every other bucket dir is
-      // never read, never rewritten (the spec pins them byte-identical)
-      val oldDirtyDocs = Tables.open(spark, docsPath(name))
-        .filter(col("bucket").isin(dirty: _*)).drop("bucket")
-      val mergedDirtyDocs = oldDirtyDocs
-        .join(changedIds, Seq("id"), "left_anti")
-        .unionByName(changed)
-      val docsStaging = s"${docsPath(name)}__staging"
-      writeBucketedTable(mergedDirtyDocs, "id", n, docsStaging, dirty.size)
-      swapBuckets(docsStaging, docsPath(name), dirty)
-
-      // chunks: the removed side (old chunks of changed docs) feeds the
-      // incremental BM25 merge; the pruned read touches dirty buckets only
-      val changedDocIds = changedIds.select(col("id").as("documentId"))
-      val dirtyChunks = Tables.open(spark, chunksPath(name))
-        .filter(col("bucket").isin(dirty: _*)).drop("bucket")
-      val removedChunkIds = dirtyChunks
-        .join(changedDocIds, Seq("documentId"), "left_semi")
-        // indexedData rides along so the BM25 merge can tokenize the REMOVED
-        // side for O(changed) df decrements instead of re-scanning the corpus
-        .select(col("chunkId").as("docId"), col("indexedData"))
-        .persist()
-      // MATERIALIZE before the chunks swap: the plan reads chunksPath, and a
-      // lazy first action after the swap would see the post-swap table (where
-      // these ids are gone) — the anti-join side would silently empty
-      removedChunkIds.count()
-      val newChunks = Indexing.buildChunks(
-        Tables.open(spark, docsPath(name))
-          .filter(col("bucket").isin(dirty: _*)).drop("bucket")
-          .join(changedIds, Seq("id"), "left_semi"),
-        embedder, startId = old.lastIndexItemId + 1)
-      val keptDirtyChunks = dirtyChunks
-        .join(changedDocIds, Seq("documentId"), "left_anti")
-      val chunksStaging = s"${chunksPath(name)}__staging"
-      writeBucketedTable(
-        keptDirtyChunks.select(newChunks.columns.map(col): _*)
-          .unionByName(newChunks),
-        "documentId", n, chunksStaging, dirty.size)
-      swapBuckets(chunksStaging, chunksPath(name), dirty)
-
-      (removedChunkIds, changedDocIds)
-    } else {
-      // same batch-bounded broadcast as the bucketed branch: the stored
-      // tables are the big side, the changed-id set never is
-      val changedIds = broadcast(changed.select(col("id")).distinct())
-      val oldDocs = Tables.open(spark, docsPath(name))
-      val mergedDocs = oldDocs
-        .join(changedIds, Seq("id"), "left_anti")
-        .unionByName(changed)
-      // Parquet is immutable — stage the merged table, then swap in.
-      val docsStaging = s"${docsPath(name)}__staging"
-      mergedDocs.write.mode(SaveMode.Overwrite).parquet(docsStaging)
-      swap(docsStaging, docsPath(name))
-
-      val changedDocIds = changedIds.select(col("id").as("documentId"))
-      val newChunks = Indexing.buildChunks(
-        Tables.open(spark, docsPath(name))
-          .join(changedIds, Seq("id"), "left_semi"),
-        embedder, startId = old.lastIndexItemId + 1)
-      val removedChunkIds = Tables.open(spark, chunksPath(name))
-        .join(changedDocIds, Seq("documentId"), "left_semi")
-        .select(col("chunkId").as("docId"), col("indexedData"))
-        .persist()
-      removedChunkIds.count() // materialize BEFORE the swap (see bucketed branch)
-      val keptChunks = Tables.open(spark, chunksPath(name))
-        .join(changedDocIds, Seq("documentId"), "left_anti")
-      val chunksStaging = s"${chunksPath(name)}__staging"
-      keptChunks.select(newChunks.columns.map(col): _*).unionByName(newChunks)
-        .write.mode(SaveMode.Overwrite).parquet(chunksStaging)
-      swap(chunksStaging, chunksPath(name))
-      (removedChunkIds, changedDocIds)
-    }
-
-    val (removedChunkIds, changedDocIds) = removedAndChanged
-    // BM25: incremental postings merge — the removed chunks' postings
-    // tombstone out, tokenization (the dominant shuffle: explode over every
-    // token of every doc) runs over the NEW chunks only
-    val newPersistedChunks = this.chunks(name)
-      .join(changedDocIds, Seq("documentId"), "left_semi")
-    bm25Indexer(name).updateIncremental(removedChunkIds, newPersistedChunks)
-    // IVF follows the same incremental shape: tombstone the replaced chunk
-    // ids ALWAYS (otherwise vector_ivf keeps serving them), assign the new
-    // chunks against the frozen centroids when this call owns the refresh.
-    // Streaming callers pass refreshIvf = false and APPEND the batch's
-    // chunks themselves (StreamingUpdate) — assigning here too would
-    // double-index every batch; the tombstones close the stale-replacement
-    // gap the append-only path used to carry.
-    val ivfDir = s"${dir(name)}/indexes/ivf"
-    if (fs.exists(new Path(s"$ivfDir/centroids"))) {
-      val ivf = new graft.operators.IvfVectorIndexer(spark, ivfDir, embedder)
-      val removedAsChunk = removedChunkIds.select(col("docId").as("chunkId"))
-      if (refreshIvf) ivf.refreshIncremental(removedAsChunk, newPersistedChunks)
-      else ivf.removeIds(removedAsChunk)
-    }
-    removedChunkIds.unpersist()
-
-    val (nChunks, maxId, nDocs) = manifestStats(name)
+    val (nChunks, maxId, nDocs) = rewrite(name, old,
+      broadcast(changed.select(col("id")).distinct()), Some(changed), refreshIvf)
     // watermark = max EVER SEEN, maintained monotonically from the batch in
     // hand (O(batch), not an O(corpus) rescan): a replaced doc can carry an
     // older timestamp, but an incremental-read cursor must never move back —
@@ -535,11 +519,11 @@ final class CollectionManager(
     val m = old.copy(
       updatedTime = nowIso,
       lastModifiedDocumentTime = {
-        // usually populated by the batch's first action above (dirty-bucket
-        // collect / staging write) — no extra job. Inside foreachBatch the
-        // micro-batch runs on a CLONED session whose listener never reaches
-        // this Observation (measured: Observation.get deadlocks there), so
-        // an unreported observation falls back to the explicit max() job.
+        // usually populated by the rewrite's passes over the batch above —
+        // no extra job. Inside foreachBatch the micro-batch runs on a CLONED
+        // session whose listener never reaches this Observation (measured:
+        // Observation.get deadlocks there), so an unreported observation
+        // falls back to the explicit max() job.
         def reported(o: org.apache.spark.sql.Observation): Option[String] =
           o.future.value match {
             case Some(scala.util.Success(row)) =>
@@ -569,72 +553,15 @@ final class CollectionManager(
     * (reference contract: `remove_ids`, `sqllite_indexer.py:45` /
     * `chroma_indexer.py` batched deletes, driven from
     * `documents_collection_creator.py:204-221`): anti-join rewrite of the
-    * docs and chunks tables, BM25 rebuild, IVF refresh when built. Unknown
-    * ids are a no-op per row, like the reference's mapping lookup.
+    * docs and chunks tables, BM25 incremental merge, IVF tombstones when
+    * built. Unknown ids are a no-op per row, like the reference's mapping
+    * lookup.
     */
   def delete(name: String, ids: Seq[String]): Model.Manifest = withWriterLock(name) {
     val old = readManifest(name)
     import spark.implicits._
     val idDf = broadcast(ids.toDF("id"))
-    val docIdDf = idDf.select(col("id").as("documentId"))
-
-    // one collect serves both the removed-chunk read and the bucket rewrite
-    val dirty =
-      if (old.bucketCount > 0) dirtyBuckets(idDf, "id", old.bucketCount) else Nil
-    // removed chunk ids for the incremental postings merge — read BEFORE the
-    // chunks swap (a lazy read materialized after it would see the new table)
-    val removedChunkIds = {
-      val base = Tables.open(spark, chunksPath(name))
-      val pruned =
-        if (old.bucketCount > 0) base.filter(col("bucket").isin(dirty: _*))
-        else base
-      pruned.join(docIdDf, Seq("documentId"), "left_semi")
-        .select(col("chunkId").as("docId"), col("indexedData")).persist()
-    }
-    removedChunkIds.count()
-
-    if (old.bucketCount > 0) {
-      // ---- bucketed layout: rewrite only the buckets holding deleted ids ----
-      val n = old.bucketCount
-      val keptDirtyDocs = Tables.open(spark, docsPath(name))
-        .filter(col("bucket").isin(dirty: _*)).drop("bucket")
-        .join(idDf, Seq("id"), "left_anti")
-      val docsStaging = s"${docsPath(name)}__staging"
-      writeBucketedTable(keptDirtyDocs, "id", n, docsStaging, dirty.size)
-      swapBuckets(docsStaging, docsPath(name), dirty)
-
-      val keptDirtyChunks = Tables.open(spark, chunksPath(name))
-        .filter(col("bucket").isin(dirty: _*)).drop("bucket")
-        .join(docIdDf, Seq("documentId"), "left_anti")
-      val chunksStaging = s"${chunksPath(name)}__staging"
-      writeBucketedTable(keptDirtyChunks, "documentId", n, chunksStaging, dirty.size)
-      swapBuckets(chunksStaging, chunksPath(name), dirty)
-    } else {
-      val keptDocs = Tables.open(spark, docsPath(name))
-        .join(idDf, Seq("id"), "left_anti")
-      val docsStaging = s"${docsPath(name)}__staging"
-      keptDocs.write.mode(SaveMode.Overwrite).parquet(docsStaging)
-      swap(docsStaging, docsPath(name))
-
-      val keptChunks = Tables.open(spark, chunksPath(name))
-        .join(docIdDf, Seq("documentId"), "left_anti")
-      val chunksStaging = s"${chunksPath(name)}__staging"
-      keptChunks.write.mode(SaveMode.Overwrite).parquet(chunksStaging)
-      swap(chunksStaging, chunksPath(name))
-    }
-
-    // delete = update's removal half: postings of the removed chunks anti-join
-    // out, and df/n/avgdl adjust by tokenizing ONLY the removed chunks' text
-    // (O(removed), never an O(corpus) re-derivation); IVF tombstones the
-    // same ids (O(ids) append — removedChunkIds came from the live chunks
-    // table, so every tombstone kills exactly one assigned row)
-    bm25Indexer(name).updateIncremental(
-      removedChunkIds, this.chunks(name).limit(0))
-    val ivfDir = s"${dir(name)}/indexes/ivf"
-    if (fs.exists(new Path(s"$ivfDir/centroids")))
-      new graft.operators.IvfVectorIndexer(spark, ivfDir, embedder)
-        .removeIds(removedChunkIds.select(col("docId").as("chunkId")))
-    removedChunkIds.unpersist()
+    val (nChunks, maxId, nDocs) = rewrite(name, old, idDf, None, refreshIvf = false)
 
     // dedup-on-arrival signatures follow the documents: a deleted doc's stale
     // signature must not block re-ingesting similar content later. Append
@@ -651,7 +578,6 @@ final class CollectionManager(
         .write.mode("append").parquet(sigsPath(name))
     }
 
-    val (nChunks, maxId, nDocs) = manifestStats(name)
     val m = old.copy(
       updatedTime = nowIso,
       numberOfDocuments = nDocs, numberOfChunks = nChunks,
@@ -823,12 +749,6 @@ final class CollectionManager(
       .toDF("check", "expected", "actual", "ok")
   }
 
-  /** Rebuild every derived index from the chunks table: BM25 postings
-    * always; the IVF index when one exists, with FRESH centroid training at
-    * the same list count — the churn repair for long-running streamed
-    * collections whose append-only IVF assignment has drifted from the
-    * frozen centroids.
-    */
   /** Fold the BM25 index's delta/tombstone tail (grown by incremental
     * updates/deletes) back into its base segment — LSM compaction. Values
     * are unchanged by construction; search latency and the tombstone
@@ -863,41 +783,22 @@ final class CollectionManager(
     */
   def retrainIvf(name: String): Unit = withWriterLock(name) {
     if (ivfIndex(name).isDefined) {
-      val lists = Tables.open(spark, s"${dir(name)}/indexes/ivf/centroids")
+      val lists = Tables.open(spark, s"${ivfDir(name)}/centroids")
         .count().toInt
       buildIvfIndex(name, nLists = lists)
       ()
     }
   }
 
+  /** Rebuild every derived index from the chunks table: BM25 postings
+    * always; the IVF index when one exists, with FRESH centroid training at
+    * the same list count ([[retrainIvf]]) — the churn repair for
+    * long-running streamed collections whose append-only IVF assignment has
+    * drifted from the frozen centroids.
+    */
   def reindex(name: String): Unit = withWriterLock(name) {
     bm25Indexer(name).index(this.chunks(name))
-    if (ivfIndex(name).isDefined) {
-      val lists = Tables.open(spark, s"${dir(name)}/indexes/ivf/centroids")
-        .count().toInt // preserve the existing list count
-      buildIvfIndex(name, nLists = lists)
-    }
-  }
-
-  /** Swap staging into place via rename-to-backup first: a crash between steps
-    * leaves either the old table (backup not yet renamed away is recoverable) or
-    * the new one — never a missing directory, unlike delete-then-rename.
-    *
-    * The backup name is DOT-PREFIXED (`.{name}__old`): when the target is a
-    * `bucket=K` dir inside a partitioned table root, a visible residue dir
-    * after a crash would poison partition discovery — Spark infers `bucket`
-    * as STRING from the non-numeric dir name, rows under the residue re-read
-    * as duplicates, and the misbucketed fsck check null-excludes them. Hidden
-    * names are skipped by Spark's listing (and ParquetMeta), so crash residue
-    * is inert: invisible to every reader, reclaimed by the next swap.
-    */
-  private def swap(staging: String, target: String): Unit = {
-    val t = new Path(target)
-    val backup = new Path(t.getParent, "." + t.getName + "__old")
-    if (fs.exists(backup)) fs.delete(backup, true)
-    if (fs.exists(t)) fs.rename(t, backup)
-    fs.rename(new Path(staging), t)
-    if (fs.exists(backup)) fs.delete(backup, true)
+    retrainIvf(name)
   }
 
   // --------------------------------------------------------------------- queries
@@ -919,19 +820,9 @@ final class CollectionManager(
   private def availableIndexers(name: String): Map[String, graft.operators.Indexer] = {
     val base = Map[String, graft.operators.Indexer](
       "vector_exact_l2" -> vectorIndexer(name), "bm25" -> bm25Indexer(name))
-    val ivfDir = s"${dir(name)}/indexes/ivf"
-    if (fs.exists(new Path(s"$ivfDir/centroids")))
-      base + ("vector_ivf" -> new graft.operators.IvfVectorIndexer(
-        spark, ivfDir, embedder))
-    else base
+    base ++ ivfIndex(name).map("vector_ivf" -> _)
   }
 
-  /** Hybrid vector+BM25 search with optional metadata-filter DSL (SURVEY §3.1)
-    * and result-projection flags (P7: include text / matched-chunk / all-chunks
-    * payloads — the documents table joins in only when a payload needs it).
-    * `indexNames` selects a subset of the built indexes (None = all, like the
-    * reference's --indexes arg); multiple indexes RRF-fuse with constant `rrfK`.
-    */
   /** Spelling suggestions for a query's terms against THIS collection's
     * BM25 vocabulary — the termDf LSM view (base ⊕ deltas), so suggestions
     * track incremental updates with no extra bookkeeping. SymSpell
@@ -1135,6 +1026,13 @@ final class CollectionManager(
       order = Seq(col("phrase_tf").desc, col("documentId")))
   }
 
+  /** Hybrid vector+BM25 search with optional metadata-filter DSL (SURVEY §3.1)
+    * and result-projection flags (P7: include text / matched-chunk / all-chunks
+    * payloads — the documents table joins in only when a payload needs it).
+    * `indexNames` selects a subset of the built indexes, like the reference's
+    * --indexes arg (None = the two every collection has, `vector_exact_l2`
+    * and `bm25`); multiple indexes RRF-fuse with constant `rrfK`.
+    */
   def search(
       name: String, query: String,
       maxChunks: Int = 15, maxDocs: Int = 5,

@@ -8,7 +8,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.types.StructType
 
-/** The one way to open a parquet table.
+/** The one way to open a parquet table, and the one way to replace one
+  * ([[replace]] / [[swap]]).
   *
   * A bare `spark.read.parquet(path)` infers the schema EAGERLY with a Spark
   * job (one task reading one footer on an executor), so every table a plan
@@ -48,6 +49,42 @@ object Tables {
     if (p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
       Some(open(spark, path))
     else None
+  }
+
+  /** Rewrite the table at `path`: `write` writes the new table, in overwrite
+    * mode, into the staging sibling it is handed (`{path}__staging` unless
+    * `staging` names another), and [[swap]] then moves it into place. The
+    * write may read `path` itself — Spark refuses a direct self-overwrite of
+    * a path the plan reads — and every reader sees the old table or the new
+    * one, never a partial directory.
+    */
+  def replace(spark: SparkSession, path: String, staging: Option[String] = None)(
+      write: String => Unit): Unit = {
+    val s = staging.getOrElse(s"${path}__staging")
+    write(s)
+    swap(spark, s, path)
+  }
+
+  /** Swap staging into place via rename-to-backup first: a crash between steps
+    * leaves either the old table (backup not yet renamed away is recoverable) or
+    * the new one — never a missing directory, unlike delete-then-rename.
+    *
+    * The backup name is DOT-PREFIXED (`.{name}__old`): when the target is a
+    * `bucket=K` dir inside a partitioned table root, a visible residue dir
+    * after a crash would poison partition discovery — Spark infers `bucket`
+    * as STRING from the non-numeric dir name, rows under the residue re-read
+    * as duplicates, and the misbucketed fsck check null-excludes them. Hidden
+    * names are skipped by Spark's listing (and ParquetMeta), so crash residue
+    * is inert: invisible to every reader, reclaimed by the next swap.
+    */
+  def swap(spark: SparkSession, staging: String, target: String): Unit = {
+    val t = new Path(target)
+    val fs = t.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val backup = new Path(t.getParent, "." + t.getName + "__old")
+    if (fs.exists(backup)) fs.delete(backup, true)
+    if (fs.exists(t)) fs.rename(t, backup)
+    fs.rename(new Path(staging), t)
+    if (fs.exists(backup)) fs.delete(backup, true)
   }
 
   /** The schema Spark's inference would give `path`, from one driver-side

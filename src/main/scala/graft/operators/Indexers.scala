@@ -186,11 +186,12 @@ final class Bm25Indexer(
 
   /** Range-write a fresh positional base segment and clear its delta tail. */
   private def writePositionsBase(pos: DataFrame): Unit = {
-    pos.select("term", "docId", "positions")
-      .repartitionByRange(col("term"), col("docId"))
-      .sortWithinPartitions("term", "docId")
-      .write.mode(SaveMode.Overwrite).parquet(p("positions") + "__staging")
-    swapDir(p("positions") + "__staging", p("positions"))
+    Tables.replace(spark, p("positions")) { staging =>
+      pos.select("term", "docId", "positions")
+        .repartitionByRange(col("term"), col("docId"))
+        .sortWithinPartitions("term", "docId")
+        .write.mode(SaveMode.Overwrite).parquet(staging)
+    }
     fsys.delete(new org.apache.hadoop.fs.Path(p("positions_delta")), true)
   }
 
@@ -349,50 +350,41 @@ final class Bm25Indexer(
     fsys.delete(new org.apache.hadoop.fs.Path(p("termDf_delta")), true)
     fsys.delete(new org.apache.hadoop.fs.Path(p("corpus_delta")), true)
     val eff = postingsTable()
-    eff.groupBy("term").agg(count("*").as("df"))
-      .write.mode(SaveMode.Overwrite).parquet(p("termDf") + "__staging")
-    swapDir(p("termDf") + "__staging", p("termDf"))
+    Tables.replace(spark, p("termDf")) { staging =>
+      eff.groupBy("term").agg(count("*").as("df"))
+        .write.mode(SaveMode.Overwrite).parquet(staging)
+    }
     // Corpus stats from the postings (distinct docId carries docLen): saves a
     // second full-corpus tokenize, and counts docs-with-tokens — the
     // population BM25 length normalization is defined over (a doc with zero
     // tokens can never match, so excluding it from n/avgdl is the FTS5-faithful
     // choice and what the DuckDB oracle computes). totalLen persists so the
     // incremental path can maintain n/avgdl as exact integer deltas.
-    eff.select("docId", "docLen").distinct()
-      .agg(count("*").as("n"), sum("docLen").as("totalLen"))
-      .select(col("n"),
-        (col("totalLen").cast("double") / col("n").cast("double")).as("avgdl"),
-        col("totalLen"))
-      .write.mode(SaveMode.Overwrite).parquet(p("corpus") + "__staging")
-    swapDir(p("corpus") + "__staging", p("corpus"))
+    Tables.replace(spark, p("corpus")) { staging =>
+      eff.select("docId", "docLen").distinct()
+        .agg(count("*").as("n"), sum("docLen").as("totalLen"))
+        .select(col("n"),
+          (col("totalLen").cast("double") / col("n").cast("double")).as("avgdl"),
+          col("totalLen"))
+        .write.mode(SaveMode.Overwrite).parquet(staging)
+    }
   }
 
-  /** Rename-to-backup swap (same crash posture as the collection tables):
-    * the target dir is whole-old or whole-new, never missing mid-write —
-    * required here because compaction READS the live postings while staging
-    * their replacement.
+  /** Write a fresh base segment and clear the delta/tombstone tail. The base
+    * is staged and swapped in ([[Tables.replace]]) because compaction READS
+    * the live postings while writing their replacement.
     */
-  private def swapDir(staging: String, target: String): Unit = {
-    val fs = fsys
-    val t = new org.apache.hadoop.fs.Path(target)
-    val backup = new org.apache.hadoop.fs.Path(target + "__old")
-    if (fs.exists(backup)) fs.delete(backup, true)
-    if (fs.exists(t)) fs.rename(t, backup)
-    fs.rename(new org.apache.hadoop.fs.Path(staging), t)
-    if (fs.exists(backup)) fs.delete(backup, true)
-  }
-
-  /** Write a fresh base segment and clear the delta/tombstone tail. */
   private def writeBase(postings: DataFrame): Unit = {
     // Range-partition on (term, docId) rather than hash on term: a
     // stopword-grade hot term would land its entire postings list in one hash
     // partition, while a range boundary splits it across partitions (bounded
     // skew) and keeps terms contiguous so parquet row-group min/max stats
     // still prune term lookups.
-    postings.repartitionByRange(col("term"), col("docId"))
-      .sortWithinPartitions("term", "docId")
-      .write.mode(SaveMode.Overwrite).parquet(p("postings") + "__staging")
-    swapDir(p("postings") + "__staging", p("postings"))
+    Tables.replace(spark, p("postings")) { staging =>
+      postings.repartitionByRange(col("term"), col("docId"))
+        .sortWithinPartitions("term", "docId")
+        .write.mode(SaveMode.Overwrite).parquet(staging)
+    }
     fsys.delete(new org.apache.hadoop.fs.Path(p("postings_delta")), true)
     fsys.delete(new org.apache.hadoop.fs.Path(p("tombstones")), true)
   }
@@ -555,11 +547,7 @@ final class Bm25Indexer(
     if (fsys.exists(new org.apache.hadoop.fs.Path(p("positions")))) {
       val foldedPos = positionsTable().dropDuplicates("term", "docId").persist()
       foldedPos.count() // materialize before the swap invalidates the source
-      foldedPos.repartitionByRange(col("term"), col("docId"))
-        .sortWithinPartitions("term", "docId")
-        .write.mode(SaveMode.Overwrite).parquet(p("positions") + "__staging")
-      swapDir(p("positions") + "__staging", p("positions"))
-      fsys.delete(new org.apache.hadoop.fs.Path(p("positions_delta")), true)
+      writePositionsBase(foldedPos)
       foldedPos.unpersist()
     }
     val folded = postingsTable()
@@ -701,12 +689,13 @@ final class Bm25Indexer(
         graft.core.Spread.forCompute(termDfTable()), "term", maxEdits)
       .withColumn("max_edits", lit(maxEdits))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    keys
-      .repartitionByRange(col("delkey"))
-      .sortWithinPartitions("delkey")
-      .write.mode(SaveMode.Overwrite).parquet(p("suggest_keys") + "__staging")
+    Tables.replace(spark, p("suggest_keys")) { staging =>
+      keys
+        .repartitionByRange(col("delkey"))
+        .sortWithinPartitions("delkey")
+        .write.mode(SaveMode.Overwrite).parquet(staging)
+    }
     keys.unpersist(blocking = false)
-    swapDir(p("suggest_keys") + "__staging", p("suggest_keys"))
     fsys.delete(new org.apache.hadoop.fs.Path(p("suggest_keys_delta")), true)
     writeSuggestMeta(maxEdits)
   }
@@ -1136,19 +1125,12 @@ final class IvfVectorIndexer(
     */
   def compact(): Unit = {
     if (!fsys.exists(new org.apache.hadoop.fs.Path(tombstonesPath))) return
-    // stage-and-swap: Spark refuses a direct self-overwrite of a path the
-    // plan reads, and the rename keeps the whole-old-or-whole-new posture
-    val staging = assignedPath + "__staging"
-    assignedTable().write.mode(SaveMode.Overwrite)
-      .partitionBy("listId").parquet(staging)
-    val fs = fsys
-    val t = new org.apache.hadoop.fs.Path(assignedPath)
-    val backup = new org.apache.hadoop.fs.Path(assignedPath + "__old")
-    if (fs.exists(backup)) fs.delete(backup, true)
-    if (fs.exists(t)) fs.rename(t, backup)
-    fs.rename(new org.apache.hadoop.fs.Path(staging), t)
-    if (fs.exists(backup)) fs.delete(backup, true)
-    fs.delete(new org.apache.hadoop.fs.Path(tombstonesPath), true)
+    // the rewrite reads the table it replaces: stage and swap
+    Tables.replace(spark, assignedPath) { staging =>
+      assignedTable().write.mode(SaveMode.Overwrite)
+        .partitionBy("listId").parquet(staging)
+    }
+    fsys.delete(new org.apache.hadoop.fs.Path(tombstonesPath), true)
   }
 
   /** Bytes in the tombstone tail — the compact-or-not signal. */

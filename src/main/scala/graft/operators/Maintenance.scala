@@ -9,8 +9,8 @@ import org.apache.spark.sql.SparkSession
   * ingest runs) accrete small files, and at 100 TB the scan's task count — and
   * the namenode/liststore pressure — is set by FILE count, not byte count.
   * Compaction rewrites a fragmented table into ~`targetBytes` files and swaps
-  * it in atomically (the [[graft.core.CollectionManager]] rename discipline:
-  * readers see the old table or the new one, never a partial directory).
+  * it in atomically ([[graft.core.Tables.replace]]: readers see the old table
+  * or the new one, never a partial directory).
   *
   * The reference meets the same failure mode as SQLite page fragmentation and
   * re-index cycles (`sqllite_indexer.py:117-129` rebuilds storage when the
@@ -75,23 +75,17 @@ object Maintenance {
     if (n == 0 || avg >= minAvgBytes) return n
     val nOut = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
     if (n <= nOut) return n // rewrite couldn't reduce the file count — skip
-    // staging/backup are DOT-PREFIXED siblings: when `path` is a partition
-    // dir (bucket=K, listId=N) inside a table root, visible residue after a
-    // crash would corrupt partition discovery (the value parses as a string,
-    // duplicating rows and dodging pruning); hidden names are skipped by
-    // Spark's listing, so a crashed compact leaves only inert residue that
-    // the next run reclaims.
+    // staging is a DOT-PREFIXED sibling (and so is the swap's backup): when
+    // `path` is a partition dir (bucket=K, listId=N) inside a table root,
+    // visible residue after a crash would corrupt partition discovery (the
+    // value parses as a string, duplicating rows and dodging pruning);
+    // hidden names are skipped by Spark's listing, so a crashed compact
+    // leaves only inert residue that the next run reclaims.
     val target = new Path(path)
     val staging = new Path(target.getParent, "." + target.getName + "__compact")
-    val fs = target.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(staging)) fs.delete(staging, true)
-    Tables.open(spark, path).coalesce(nOut)
-      .write.mode("overwrite").parquet(staging.toString)
-    val backup = new Path(target.getParent, "." + target.getName + "__old")
-    if (fs.exists(backup)) fs.delete(backup, true)
-    fs.rename(target, backup)
-    fs.rename(staging, target)
-    fs.delete(backup, true)
+    Tables.replace(spark, path, Some(staging.toString)) { s =>
+      Tables.open(spark, path).coalesce(nOut).write.mode("overwrite").parquet(s)
+    }
     fileStats(spark, path)._1
   }
 

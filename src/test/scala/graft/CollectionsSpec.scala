@@ -420,6 +420,65 @@ class CollectionsSpec extends AnyFunSuite with SparkSuite {
       .contains("misbucketed_documents"))
   }
 
+  test("flat and bucketed layouts agree across update → delete → empty-chunks update") {
+    val tmp = Files.createTempDirectory("graft-layouts").toString
+    val cm = mkManager(tmp)
+    val docs = rawDocs(docsV1 ++ Seq(
+      ("d5", "file://d5", Map("space" -> "OPS", "lastModifiedAt" -> "2026-01-04T00:00:00"),
+        "incident review\nrollback of the deploy\nroot cause notes"),
+      ("d6", "file://d6", Map("space" -> "ENG", "lastModifiedAt" -> "2026-01-05T00:00:00"),
+        "bm25 scoring and query parsing in the search engine")))
+    val layouts = Seq("lf" -> 0, "lb" -> 4)
+    layouts.foreach { case (n, buckets) => cm.create(n, docs, nBuckets = buckets) }
+    def fsckRed(n: String): Set[String] = cm.fsck(n).collect()
+      .filterNot(_.getAs[Boolean]("ok")).map(_.getAs[String]("check")).toSet
+
+    // replace d2, add d4
+    val changed = rawDocs(Seq(
+      ("d2", "file://d2", Map("space" -> "OPS", "lastModifiedAt" -> "2026-02-01T00:00:00"),
+        "rewritten deployment instructions\nnow with containers"),
+      ("d4", "file://d4", Map("space" -> "ENG", "lastModifiedAt" -> "2026-02-02T00:00:00"),
+        "brand new doc about stream processing")))
+    layouts.foreach { case (n, _) => cm.update(n, changed) }
+    layouts.foreach { case (n, _) => assert(fsckRed(n).isEmpty, s"$n after update") }
+    // two ids, one of them unknown
+    layouts.foreach { case (n, _) => cm.delete(n, Seq("d1", "no-such-doc")) }
+    layouts.foreach { case (n, _) => assert(fsckRed(n).isEmpty, s"$n after delete") }
+    // one doc with an explicitly empty chunks array: its chunks leave, the doc stays
+    val emptied = rawDocs(Seq(
+      ("d5", "file://d5", Map("space" -> "OPS", "lastModifiedAt" -> "2026-02-03T00:00:00"),
+        "incident review emptied")))
+      .withColumn("chunks", array().cast(
+        "array<struct<indexedData:string,metadata:map<string,string>>>"))
+    layouts.foreach { case (n, _) => cm.update(n, emptied) }
+
+    def sorted(df: org.apache.spark.sql.DataFrame) = df.collect().map(_.toString).sorted.toSeq
+    def state(n: String) = {
+      val bm25 = new graft.operators.Bm25Indexer(
+        spark, s"$tmp/$n/indexes/bm25", s"$tmp/$n/chunks")
+      val m = cm.readManifest(n)
+      Seq(
+        sorted(cm.documents(n)),
+        sorted(cm.chunks(n).select("documentId", "chunkNumber", "indexedData")),
+        sorted(bm25.postingsTable()
+          .join(cm.chunks(n).select(col("chunkId").as("docId"),
+            col("documentId"), col("chunkNumber")), Seq("docId"))
+          .select("documentId", "chunkNumber", "term", "tf")),
+        sorted(bm25.termDfTable().select("term", "df")),
+        Seq(m.numberOfDocuments, m.numberOfChunks, m.lastIndexItemId,
+          m.lastModifiedDocumentTime).map(_.toString))
+    }
+    val Seq(flat, bucketed) = layouts.map { case (n, _) => state(n) }
+    Seq("documents", "chunks", "postings", "termDf", "manifest").zipWithIndex
+      .foreach { case (what, i) => assert(flat(i) === bucketed(i), what) }
+    assert(cm.readManifest("lf").numberOfDocuments === 5) // d1 gone, d4 added
+    assert(cm.chunks("lf").filter(col("documentId") === "d5").count() === 0)
+    // the emptied doc is the one deliberate chunkless document
+    layouts.foreach { case (n, _) =>
+      assert(fsckRed(n) === Set("chunkless_documents"), s"$n after emptying")
+    }
+  }
+
   test("bucketed layout: delete rewrites only dirty buckets; HWM survives") {
     val tmp = Files.createTempDirectory("graft-bucketed-del").toString
     val cm = mkManager(tmp)

@@ -54,6 +54,24 @@ class JobBudgetSpec extends AnyFunSuite with SparkSuite {
     assert(deleteJobs <= 27, s"delete grew a new job: $deleteJobs")
   }
 
+  test("update / delete job budgets on a flat collection") {
+    val tmp = Files.createTempDirectory("graft-budget-flat").toString
+    val cm = new CollectionManager(spark, tmp,
+      new HashingEmbedder(dim = 16), new TextSplitter(50, 10))
+    val base = (1 to 40).map(i => (s"d$i", s"document number $i about topic ${i % 7}"))
+    cm.create("f", mkDocs(base: _*))
+    val updateJobs = countJobs {
+      cm.update("f", mkDocs((1 to 40).filter(_ % 7 == 0)
+        .map(i => (s"d$i", s"document number $i rewritten")): _*))
+    }
+    val deleteJobs = countJobs {
+      cm.delete("f", (1 to 40).filter(_ % 13 == 0).map(i => s"d$i"))
+    }
+    info(s"measured jobs — flat update: $updateJobs, flat delete: $deleteJobs")
+    assert(updateJobs <= 36, s"update grew a new job: $updateJobs")
+    assert(deleteJobs <= 23, s"delete grew a new job: $deleteJobs")
+  }
+
   test("request plans build with zero jobs over a delta/tombstone tail") {
     val tmp = Files.createTempDirectory("graft-budget-req").toString
     val cm = new CollectionManager(spark, tmp,

@@ -106,15 +106,63 @@ class TablesSpec extends AnyFunSuite with SparkSuite {
     assert(Tables.openIf(spark, s"$tmp/missing").isEmpty)
   }
 
-  test("no source file but core/Tables.scala opens parquet with .read.parquet(") {
+  test("swap crash residue under the index tables is inert; the next compact reclaims it") {
+    val tmp = Files.createTempDirectory("graft-tables-residue").toString
+    val cm = new CollectionManager(spark, tmp,
+      new HashingEmbedder(dim = 16), new TextSplitter(60, 10))
+    val base = (1 to 24).map(i => (s"d$i", s"document number $i about topic ${i % 5} and spark"))
+    cm.create("c", mkDocs(base: _*))
+    cm.buildIvfIndex("c", nLists = 4, nProbe = 2)
+    // a tail for both compactions to fold: BM25 deltas + tombstones, IVF tombstones
+    cm.update("c", mkDocs(("d3", "document number 3 rewritten about joins")))
+    def state() = (
+      Seq("bm25", "vector_ivf").map(ix => cm.search("c", "document topic spark",
+        indexNames = Some(Seq(ix))).collect().toSeq),
+      cm.fsck("c").collect().toSeq)
+    val before = state()
+
+    // a swap that died between its renames leaves the hidden `.x__old`
+    // backup; a rewrite that died mid-write leaves its `x__staging` sibling
+    val (bm25, ivf) = (s"$tmp/c/indexes/bm25", s"$tmp/c/indexes/ivf")
+    val residue = Seq(s"$bm25/postings" -> s"$bm25/.postings__old",
+      s"$bm25/postings" -> s"$bm25/postings__staging",
+      s"$ivf/assigned" -> s"$ivf/.assigned__old")
+    val conf = spark.sparkContext.hadoopConfiguration
+    val fs = FileSystem.get(conf)
+    residue.foreach { case (from, to) =>
+      org.apache.hadoop.fs.FileUtil.copy(fs, new Path(from), fs, new Path(to), false, conf)
+    }
+    assert(state() === before, "crash residue changed search results or fsck")
+
+    cm.compactBm25("c")
+    cm.ivfIndex("c").get.compact()
+    val left = residue.map(_._2).filter(p => fs.exists(new Path(p)))
+    assert(left.isEmpty, s"compact left residue: ${left.mkString(", ")}")
+    assert(state() === before, "compaction changed search results or fsck")
+  }
+
+  /** Files under `src/main/scala`, other than `core/Tables.scala`, whose text
+    * contains `needle`.
+    */
+  private def sourcesOutsideTables(needle: String): Seq[String] = {
     val root = Paths.get("src/main/scala")
     assume(Files.isDirectory(root), "run from the repository root")
     import scala.jdk.CollectionConverters._
-    val offenders = Files.walk(root).iterator().asScala
+    Files.walk(root).iterator().asScala
       .filter(p => p.toString.endsWith(".scala") && !p.endsWith(Paths.get("graft/core/Tables.scala")))
-      .filter(p => new String(Files.readAllBytes(p), "UTF-8").contains(".read.parquet("))
+      .filter(p => new String(Files.readAllBytes(p), "UTF-8").contains(needle))
       .map(root.relativize(_).toString).toSeq.sorted
+  }
+
+  test("no source file but core/Tables.scala opens parquet with .read.parquet(") {
+    val offenders = sourcesOutsideTables(".read.parquet(")
     assert(offenders.isEmpty,
       s"open tables with graft.core.Tables.open, not .read.parquet(: ${offenders.mkString(", ")}")
+  }
+
+  test("no source file but core/Tables.scala swaps directories with .rename(") {
+    val offenders = sourcesOutsideTables(".rename(")
+    assert(offenders.isEmpty,
+      s"replace tables with graft.core.Tables.replace, not .rename(: ${offenders.mkString(", ")}")
   }
 }

@@ -3,12 +3,16 @@
 
 Usage: bench_compare.py OLD.json NEW.json [threshold]
 
-Prints total and per-query ratios (new/old), raw AND host-normalized when
+Timed boards: prints total and per-query ratios (new/old), raw AND host-normalized when
 both records carry the round-15 `control` block (normalized ratio =
 raw ratio x new_host_factor / old_host_factor — i.e. each side scaled to
 the pinned quiet host before comparing: a LOUD new host has factor < 1,
 which shrinks its inflated raw times). Rows above `threshold`
 (default 1.5) are listed; exit code 1 if any normalized row exceeds 2x.
+
+`Bench jobs` out-files (rows carry `build_jobs`): prints, per common row,
+every change in build_jobs, jobs, tasks and shuffle_mb, plus their totals;
+exit code 1 if any row's jobs or build_jobs rose.
 """
 import json
 import math
@@ -23,8 +27,41 @@ def load(path):
     return json.loads(txt[start:])
 
 
+STRUCTURAL = ("build_jobs", "jobs", "tasks", "shuffle_mb")
+
+
+def is_jobs_record(rec):
+    return "queries" not in rec and bool(rec) and all(
+        isinstance(v, dict) and "build_jobs" in v for v in rec.values())
+
+
+def compare_jobs(old, new):
+    common = sorted(set(old) & set(new))
+    print(f"common rows: {len(common)}  "
+          f"(+{len(set(new) - set(old))} new, -{len(set(old) - set(new))} gone)")
+    for k in STRUCTURAL:
+        a = sum(old[q][k] for q in common)
+        b = sum(new[q][k] for q in common)
+        print(f"total {k}: {a:g} -> {b:g}")
+    rose = []
+    for q in common:
+        changes = [f"{k} {old[q][k]:g} -> {new[q][k]:g}"
+                   for k in STRUCTURAL if old[q][k] != new[q][k]]
+        if changes:
+            print(f"  {q}: {', '.join(changes)}")
+        if any(new[q][k] > old[q][k] for k in ("build_jobs", "jobs")):
+            rose.append(q)
+    if rose:
+        print(f"jobs rose on: {', '.join(rose)}")
+    return 1 if rose else 0
+
+
 def main():
     old, new = load(sys.argv[1]), load(sys.argv[2])
+    if is_jobs_record(old) or is_jobs_record(new):
+        if not (is_jobs_record(old) and is_jobs_record(new)):
+            sys.exit("cannot compare a Bench jobs out-file with a timed board")
+        sys.exit(compare_jobs(old, new))
     threshold = float(sys.argv[3]) if len(sys.argv) > 3 else 1.5
     fo = old.get("control", {}).get("host_factor", 1.0)
     fn = new.get("control", {}).get("host_factor", 1.0)
