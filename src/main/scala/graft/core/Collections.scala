@@ -302,35 +302,39 @@ final class CollectionManager(
     fs.delete(new Path(stagingRoot), true) // _SUCCESS + any empty residue
   }
 
-  /** The dirty-bucket ids of a set of document ids (`id` column) on an
-    * `n`-bucket layout — bounded by n by construction, so the collect is a
-    * ≤ n-int driver list, never data. The flat layout (n = 0) has no
-    * buckets and runs no job here.
+  /** A mutation's one layout decision, which [[live]] and [[put]] match on:
+    * None on the flat layout (n = 0), which runs no job here, else
+    * `Some((n, dirty))`, the buckets the document ids in `ids` (`id` column)
+    * fall in — bounded by n, so the collect is a ≤ n-int driver list.
     */
-  private def dirtyBuckets(ids: DataFrame, n: Int): Seq[Int] =
-    if (n == 0) Nil
-    else ids.select(bucketOf(col("id"), n).as("b")).distinct()
-      .collect().map(_.getInt(0)).toSeq.sorted
+  private def dirtyBuckets(ids: DataFrame, n: Int): Option[(Int, Seq[Int])] =
+    if (n == 0) None
+    else Some((n, ids.select(bucketOf(col("id"), n).as("b")).distinct()
+      .collect().map(_.getInt(0)).toSeq.sorted))
 
   /** The rows of the table at `path` that a mutation rewrites: the whole
-    * table on the flat layout (n = 0), else only the `dirty` bucket dirs
-    * (pruned by `PartitionFilters`), with the derived `bucket` column dropped.
+    * table on the flat layout, else only the dirty bucket dirs (pruned by
+    * `PartitionFilters`), with the derived `bucket` column dropped.
     */
-  private def live(path: String, n: Int, dirty: Seq[Int]): DataFrame =
-    if (n == 0) Tables.open(spark, path)
-    else Tables.open(spark, path).filter(col("bucket").isin(dirty: _*)).drop("bucket")
+  private def live(path: String, buckets: Option[(Int, Seq[Int])]): DataFrame =
+    buckets match {
+      case None => Tables.open(spark, path)
+      case Some((_, dirty)) =>
+        Tables.open(spark, path).filter(col("bucket").isin(dirty: _*)).drop("bucket")
+    }
 
   /** Write `df` back over what [[live]] read: a staged rewrite of the whole
-    * table on the flat layout, else the `dirty` buckets staged and swapped
-    * in one by one — every other bucket dir is never read, never rewritten.
+    * table on the flat layout, else the dirty buckets staged and swapped in
+    * one by one — every other bucket dir is never read, never rewritten.
     */
-  private def put(df: DataFrame, keyCol: String, path: String, n: Int,
-                  dirty: Seq[Int]): Unit =
-    if (n == 0) Tables.replace(spark, path)(df.write.mode(SaveMode.Overwrite).parquet(_))
-    else {
-      val staging = s"${path}__staging"
-      writeBucketedTable(df, keyCol, n, staging, dirty.size)
-      swapBuckets(staging, path, dirty)
+  private def put(df: DataFrame, keyCol: String, path: String,
+                  buckets: Option[(Int, Seq[Int])]): Unit =
+    buckets match {
+      case None => Tables.replace(spark, path)(df.write.mode(SaveMode.Overwrite).parquet(_))
+      case Some((n, dirty)) =>
+        val staging = s"${path}__staging"
+        writeBucketedTable(df, keyCol, n, staging, dirty.size)
+        swapBuckets(staging, path, dirty)
     }
 
   /** Create (or overwrite) a collection from raw documents. Converter-built
@@ -436,33 +440,32 @@ final class CollectionManager(
     */
   private def rewrite(name: String, old: Model.Manifest, ids: DataFrame,
                       added: Option[DataFrame], refreshIvf: Boolean): (Long, Long, Long) = {
-    val n = old.bucketCount
     val docIds = ids.select(col("id").as("documentId"))
-    val dirty = dirtyBuckets(ids, n)
+    val buckets = dirtyBuckets(ids, old.bucketCount)
     // the removed chunks feed the incremental BM25 merge; indexedData rides
     // along so it can tokenize the REMOVED side for O(changed) df decrements
     // instead of re-scanning the corpus. MATERIALIZE before any swap: the
     // plan reads chunksPath, and a lazy first action after the swap would see
     // the post-swap table (where these ids are gone)
-    val removed = live(chunksPath(name), n, dirty)
+    val removed = live(chunksPath(name), buckets)
       .join(docIds, Seq("documentId"), "left_semi")
       .select(col("chunkId").as("docId"), col("indexedData"))
       .persist()
     removed.count()
 
-    val keptDocs = live(docsPath(name), n, dirty).join(ids, Seq("id"), "left_anti")
-    put(added.fold(keptDocs)(keptDocs.unionByName(_)), "id", docsPath(name), n, dirty)
+    val keptDocs = live(docsPath(name), buckets).join(ids, Seq("id"), "left_anti")
+    put(added.fold(keptDocs)(keptDocs.unionByName(_)), "id", docsPath(name), buckets)
 
-    val keptChunks = live(chunksPath(name), n, dirty)
+    val keptChunks = live(chunksPath(name), buckets)
       .join(docIds, Seq("documentId"), "left_anti")
     val chunks = if (added.isEmpty) keptChunks else {
       // the batch's chunks, built from its documents as just written
       val built = Indexing.buildChunks(
-        live(docsPath(name), n, dirty).join(ids, Seq("id"), "left_semi"),
+        live(docsPath(name), buckets).join(ids, Seq("id"), "left_semi"),
         embedder, startId = old.lastIndexItemId + 1)
       keptChunks.select(built.columns.map(col): _*).unionByName(built)
     }
-    put(chunks, "documentId", chunksPath(name), n, dirty)
+    put(chunks, "documentId", chunksPath(name), buckets)
 
     // BM25: incremental postings merge — the removed chunks' postings
     // tombstone out, tokenization (the dominant shuffle: explode over every

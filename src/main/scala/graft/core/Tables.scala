@@ -52,17 +52,19 @@ object Tables {
   }
 
   /** Rewrite the table at `path`: `write` writes the new table, in overwrite
-    * mode, into the staging sibling it is handed (`{path}__staging` unless
-    * `staging` names another), and [[swap]] then moves it into place. The
-    * write may read `path` itself — Spark refuses a direct self-overwrite of
-    * a path the plan reads — and every reader sees the old table or the new
-    * one, never a partial directory.
+    * mode, into the staging sibling it is handed, and [[swap]] then moves it
+    * into place. The write may read `path` itself — Spark refuses a direct
+    * self-overwrite of a path the plan reads — and every reader sees the old
+    * table or the new one, never a partial directory. The staging name is
+    * hidden (`.{name}__staging`) for the same reason as the swap's backup: a
+    * rewrite that dies mid-write leaves inert residue even when `path` is a
+    * partition dir, and the next rewrite's overwrite reclaims it.
     */
-  def replace(spark: SparkSession, path: String, staging: Option[String] = None)(
-      write: String => Unit): Unit = {
-    val s = staging.getOrElse(s"${path}__staging")
-    write(s)
-    swap(spark, s, path)
+  def replace(spark: SparkSession, path: String)(write: String => Unit): Unit = {
+    val t = new Path(path)
+    val staging = new Path(t.getParent, "." + t.getName + "__staging").toString
+    write(staging)
+    swap(spark, staging, path)
   }
 
   /** Swap staging into place via rename-to-backup first: a crash between steps

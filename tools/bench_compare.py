@@ -12,7 +12,8 @@ which shrinks its inflated raw times). Rows above `threshold`
 
 `Bench jobs` out-files (rows carry `build_jobs`): prints, per common row,
 every change in build_jobs, jobs, tasks and shuffle_mb, plus their totals;
-exit code 1 if any row's jobs or build_jobs rose.
+exit code 1 if any row's jobs or build_jobs rose, or if a row of OLD is
+missing from NEW (`Bench jobs` leaves out a query that throws).
 """
 import json
 import math
@@ -37,8 +38,9 @@ def is_jobs_record(rec):
 
 def compare_jobs(old, new):
     common = sorted(set(old) & set(new))
+    gone = sorted(set(old) - set(new))
     print(f"common rows: {len(common)}  "
-          f"(+{len(set(new) - set(old))} new, -{len(set(old) - set(new))} gone)")
+          f"(+{len(set(new) - set(old))} new, -{len(gone)} gone)")
     for k in STRUCTURAL:
         a = sum(old[q][k] for q in common)
         b = sum(new[q][k] for q in common)
@@ -53,7 +55,9 @@ def compare_jobs(old, new):
             rose.append(q)
     if rose:
         print(f"jobs rose on: {', '.join(rose)}")
-    return 1 if rose else 0
+    if gone:
+        print(f"missing from NEW: {', '.join(gone)}")
+    return 1 if rose or gone else 0
 
 
 def main():
