@@ -57,4 +57,13 @@ class OracleSqlSpec extends AnyFunSuite {
     val changed = expected.keys.filter(n => actual(n) != expected(n)).toSeq.sorted
     assert(changed.isEmpty, s"oracle text changed: ${changed.mkString(", ")}")
   }
+
+  test("the registry union refuses a name that two families register") {
+    val q = Queries.Q((s, _) => s.emptyDataFrame, None)
+    val e = intercept[IllegalArgumentException] {
+      Queries.union(Map("a" -> q, "b" -> q), Map("c" -> q), Map("b" -> q))
+    }
+    assert(e.getMessage.contains("b"))
+    assert(Queries.union(Map("a" -> q), Map("c" -> q)).keySet === Set("a", "c"))
+  }
 }
