@@ -3,10 +3,6 @@ package graft.api.queries
 import graft.api.Queries._
 import graft.api.{Tables => D}
 import graft.api.queries.OracleSql._
-import graft.functions.{FilterDsl, HashingEmbedder}
-import graft.operators.Search
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Graph and sketch analytics: triangles, BFS, PageRank, communities,

@@ -3,10 +3,7 @@ package graft.api.queries
 import graft.api.Queries._
 import graft.api.{Tables => D}
 import graft.api.queries.OracleSql._
-import graft.functions.{FilterDsl, HashingEmbedder}
 import graft.operators.Search
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Approximate nearest neighbours: SQ8, PQ and IVF-PQ compression, trained
@@ -168,7 +165,7 @@ object AnnQueries {
         .select(col("vec_id"), round(col("adc"), 6).as("adc"))
         .orderBy(col("adc"), col("vec_id")).limit(10)
     },
-    Some(s"""WITH ${ivfAssignCtes},
+    Some(s"""WITH $ivfAssignCtes,
             |cand AS (SELECT vec_id, embedding FROM assigned
             |         WHERE cid IN (SELECT cid FROM probe)),
             |grid AS (SELECT unnest(generate_series(0, 7)) AS sub),
@@ -244,7 +241,7 @@ object AnnQueries {
     Some {
       val resExpr = (v: String, c: String) =>
         s"list_transform(list_zip($v, $c), x -> CAST(CAST(x[1] AS DOUBLE) - CAST(x[2] AS DOUBLE) AS REAL))"
-      s"""WITH ${ivfAssignCtes},
+      s"""WITH $ivfAssignCtes,
          |res AS (SELECT a.vec_id, a.cid, ${resExpr("a.embedding", "c.c")} AS r
          |  FROM assigned a JOIN cent c ON a.cid = c.cid),
          |grid AS (SELECT unnest(generate_series(0, 7)) AS sub),
@@ -472,7 +469,7 @@ object AnnQueries {
         .select(col("vec_id"), round(col("score"), 6).as("dist"))
         .orderBy(col("dist").asc, col("vec_id").asc)
     },
-    Some(s"""WITH ${ivfAssignCtes},
+    Some(s"""WITH $ivfAssignCtes,
             |cand AS (SELECT vec_id, embedding FROM assigned
             |         WHERE cid IN (SELECT cid FROM probe)),
             |scored AS (SELECT vec_id,

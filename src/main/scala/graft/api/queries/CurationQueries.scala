@@ -3,9 +3,6 @@ package graft.api.queries
 import graft.api.Queries._
 import graft.api.{Tables => D}
 import graft.api.queries.OracleSql._
-import graft.functions.{FilterDsl, HashingEmbedder}
-import graft.operators.Search
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -48,7 +45,7 @@ object CurationQueries {
          |  SELECT doc_id, $langScoresSql FROM x),
          |langp AS (
          |  SELECT doc_id,
-         |${predLangSql}
+         |$predLangSql
          |  FROM lang),
          |sig AS (
          |  SELECT doc_id, len(t) AS n_tokens,
@@ -92,7 +89,7 @@ object CurationQueries {
     },
     Some {
       s"""WITH base AS (SELECT doc_id, string_split(text, chr(10)) AS ls FROM documents),
-         |${lineDedupCtes},
+         |$lineDedupCtes,
          |tk AS (SELECT r.doc_id, d.lang, r.cleaned,
          |         ${tokens("r.cleaned")} AS t
          |       FROM reb r JOIN documents d USING(doc_id)),
@@ -153,7 +150,7 @@ object CurationQueries {
          |    text || ' https://site' || (doc_id % 7) || '.example.com/p/' || doc_id AS text
          |  FROM documents),
          |base AS (SELECT doc_id, string_split(text, chr(10)) AS ls FROM docs0),
-         |${lineDedupCtes},
+         |$lineDedupCtes,
          |tk AS (SELECT r.doc_id, d.lang, r.cleaned,
          |         ${tokens("r.cleaned")} AS t
          |       FROM reb r JOIN docs0 d USING(doc_id)),

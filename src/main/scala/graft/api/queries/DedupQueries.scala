@@ -3,9 +3,7 @@ package graft.api.queries
 import graft.api.Queries._
 import graft.api.{Tables => D}
 import graft.api.queries.OracleSql._
-import graft.functions.{FilterDsl, HashingEmbedder}
-import graft.operators.Search
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -32,7 +30,7 @@ object DedupQueries {
         col("b1_size").cast("long").as("b1_size"), col("is_candidate"))
       .orderBy("doc_id"),
     Some(s"""WITH $shinglesCte,
-            |${minhashSigCtes},
+            |$minhashSigCtes,
             |z AS (SELECT doc_id, sig0, sig1, sig2, sig3,
             |  count(*) OVER (PARTITION BY sig0 || sig1) AS b0_size,
             |  count(*) OVER (PARTITION BY sig2 || sig3) AS b1_size FROM sig)
@@ -56,7 +54,7 @@ object DedupQueries {
         .orderBy("doc_id")
     },
     Some(s"""WITH $shinglesCte,
-            |${minhashSigCtes},
+            |$minhashSigCtes,
             |b AS (SELECT doc_id, sig0 || sig1 AS band0, sig2 || sig3 AS band1 FROM sig),
             |exb AS (SELECT doc_id AS ex_id, unnest([band0, band1]) AS band
             |        FROM b WHERE doc_id < 400),
@@ -247,7 +245,7 @@ object DedupQueries {
            |    SELECT g, min(doc_id) AS a, max(doc_id) AS b FROM wins GROUP BY g)
            |  WHERE a <> b),
            |dup AS (SELECT doc_id, off AS s, off + 8 AS e FROM wins JOIN sh USING (g)),
-           |${islandsCtes}
+           |$islandsCtes
            |SELECT doc_id, min(s) AS tok_start, max(e) AS tok_end, count(*) AS n_windows
            |FROM isl GROUP BY doc_id, island ORDER BY doc_id, tok_start""".stripMargin))
 
@@ -265,7 +263,7 @@ object DedupQueries {
         minLen = 24, crossDocOnly = true)
       .orderBy("doc_id", "span_start"),
     Some(s"""WITH ${crossDocWindowsCtes(24)},
-           |${islandsCtes}
+           |$islandsCtes
            |SELECT doc_id, min(s) AS span_start, max(e) AS span_end, count(*) AS n_grams
            |FROM isl GROUP BY doc_id, island ORDER BY doc_id, span_start""".stripMargin))
 
@@ -288,8 +286,8 @@ object DedupQueries {
     },
     Some(s"""WITH be AS (SELECT text FROM documents WHERE doc_id % 41 = 0),
            |tr AS (SELECT doc_id, text FROM documents WHERE doc_id % 41 <> 0),
-           |${benchOverlapCtes},
-           |${islandsCtes}
+           |$benchOverlapCtes,
+           |$islandsCtes
            |SELECT doc_id, min(s) AS span_start, max(e) AS span_end, count(*) AS n_grams
            |FROM isl GROUP BY doc_id, island ORDER BY doc_id, span_start""".stripMargin))
 
@@ -312,7 +310,7 @@ object DedupQueries {
         shardParallelism = 4)
       .orderBy("doc_id", "span_start"),
     Some(s"""WITH ${crossDocWindowsCtes(160)},
-           |${islandsCtes}
+           |$islandsCtes
            |SELECT doc_id, min(s) AS span_start, max(e) AS span_end, count(*) AS n_grams
            |FROM isl GROUP BY doc_id, island ORDER BY doc_id, span_start""".stripMargin))
 
@@ -346,8 +344,8 @@ object DedupQueries {
     Some(s"""WITH be AS (SELECT text FROM documents WHERE doc_id % 41 = 0),
            |tr AS (SELECT doc_id, text FROM documents
            |  WHERE doc_id % 41 <> 0 AND doc_id % 3 = 0),
-           |${benchOverlapCtes},
-           |${islandsCtes}
+           |$benchOverlapCtes,
+           |$islandsCtes
            |SELECT doc_id, min(s) AS span_start, max(e) AS span_end, count(*) AS n_grams
            |FROM isl GROUP BY doc_id, island ORDER BY doc_id, span_start""".stripMargin))
 
@@ -397,7 +395,7 @@ object DedupQueries {
         .orderBy("doc_id")
     },
     Some(s"""WITH ${crossDocWindowsCtes(24)},
-           |${islandsCtes},
+           |$islandsCtes,
            |sp AS (SELECT doc_id, min(s) AS s, max(e) AS e FROM isl GROUP BY doc_id, island),
            |tails AS (SELECT p.doc_id, max(p.e) AS gs, CAST(length(d.text) AS BIGINT) AS ge
            |  FROM sp p JOIN documents d USING (doc_id) GROUP BY p.doc_id, length(d.text)),
@@ -440,8 +438,8 @@ object DedupQueries {
     },
     Some(s"""WITH be AS (SELECT text FROM documents WHERE doc_id % 41 = 0),
            |tr AS (SELECT doc_id, text FROM documents WHERE doc_id % 41 <> 0),
-           |${benchOverlapCtes},
-           |${islandsCtes},
+           |$benchOverlapCtes,
+           |$islandsCtes,
            |sp AS (SELECT doc_id, min(s) AS s, max(e) AS e FROM isl GROUP BY doc_id, island),
            |pd AS (SELECT doc_id, sum(e - s) AS cov FROM sp GROUP BY doc_id)
            |SELECT count(*) AS n_train_docs,

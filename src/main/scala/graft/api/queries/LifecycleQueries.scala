@@ -3,10 +3,9 @@ package graft.api.queries
 import graft.api.Queries._
 import graft.api.{Tables => D}
 import graft.api.queries.OracleSql._
-import graft.functions.{FilterDsl, HashingEmbedder}
+import graft.functions.HashingEmbedder
 import graft.operators.Search
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** The collection lifecycle end to end: chunk fan-out and the recursive

@@ -3,10 +3,8 @@ package graft.api.queries
 import graft.api.Queries._
 import graft.api.{Tables => D}
 import graft.api.queries.OracleSql._
-import graft.functions.{FilterDsl, HashingEmbedder}
+import graft.functions.FilterDsl
 import graft.operators.Search
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** The FTS5 MATCH grammar ([[graft.operators.QueryLang]]): boolean,
@@ -222,7 +220,7 @@ object MatchQueries {
            |    list_filter(generate_series(1, len(w)), i -> w[i] LIKE 'vec%') AS pb
            |  FROM wl
            |  WHERE list_contains(w, 'spark') AND len(list_filter(w, x -> x LIKE 'vec%')) > 0),
-           |${nearSpansCte},
+           |$nearSpansCte,
            |nearc AS (SELECT doc_id FROM spans WHERE span_len <= 6),
            |cand AS (SELECT doc_id FROM pp UNION SELECT doc_id FROM nearc),
            |$candidatesTopk""".stripMargin))
@@ -349,7 +347,7 @@ object MatchQueries {
            |    list_filter(generate_series(1, len(w)), i -> w[i] = 'vector') AS pb
            |  FROM wl
            |  WHERE list_contains(w, 'spark') AND list_contains(w, 'vector')),
-           |${nearSpansCte},
+           |$nearSpansCte,
            |nearc AS (SELECT doc_id FROM spans WHERE span_len <= 8),
            |boolc AS (SELECT doc_id FROM wl
            |  WHERE list_contains(w, 'join') AND NOT list_contains(w, 'hash')),
@@ -371,7 +369,7 @@ object MatchQueries {
     },
     Some(s"""WITH tok AS (SELECT doc_id, ${tokens("text")} AS w
            |  FROM documents),
-           |${minSpanCtes}
+           |$minSpanCtes
            |SELECT doc_id, CAST(span_len AS BIGINT) AS span_len,
            |  CAST(list_min(list_transform(
            |    list_filter(cand, z -> z.e - z.st + 1 = span_len), z -> z.st)) AS BIGINT)
@@ -406,7 +404,7 @@ object MatchQueries {
            |  FROM documents WHERE doc_id % 13 <> 0),
            |tok AS (SELECT doc_id, ${tokens("text")} AS w
            |  FROM corpus),
-           |${hashJoinPhraseSql}
+           |$hashJoinPhraseSql
            |ORDER BY phrase_tf DESC, doc_id LIMIT 200""".stripMargin))
 
   /** Boolean text query ([[graft.operators.QueryLang.booleanSearch]]):
@@ -443,7 +441,7 @@ object MatchQueries {
     Some(s"""WITH tok AS (SELECT doc_id,
            |    ${tokens("text")} AS w
            |  FROM documents),
-           |${hashJoinPhraseSql}
+           |$hashJoinPhraseSql
            |ORDER BY phrase_tf DESC, doc_id LIMIT 100""".stripMargin))
 
   /** Proximity search ([[graft.operators.QueryLang.minSpanSearch]]): among
@@ -458,7 +456,7 @@ object MatchQueries {
     Some(s"""WITH tok AS (SELECT doc_id,
            |    ${tokens("text")} AS w
            |  FROM documents),
-           |${minSpanCtes}
+           |$minSpanCtes
            |SELECT doc_id, CAST(span_len AS BIGINT) AS span_len,
            |  CAST(list_min(list_transform(
            |    list_filter(cand, z -> z.e - z.st + 1 = span_len), z -> z.st)) AS BIGINT)

@@ -2,10 +2,7 @@ package graft.api.queries
 
 import graft.api.Queries._
 import graft.api.{Tables => D}
-import graft.api.queries.OracleSql._
-import graft.functions.{FilterDsl, HashingEmbedder}
-import graft.operators.Search
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import graft.functions.FilterDsl
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 

@@ -3,9 +3,8 @@ package graft.api.queries
 import graft.api.Queries._
 import graft.api.{Tables => D}
 import graft.api.queries.OracleSql._
-import graft.functions.{FilterDsl, HashingEmbedder}
 import graft.operators.Search
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -139,7 +138,7 @@ object SearchQueries {
            |  FROM corpus),
            |vocab AS (SELECT term, count(DISTINCT doc_id) AS term_df FROM toks GROUP BY term),
            |qs AS (SELECT unnest(['tabel','qurey','qqnewtrm']) AS q),
-           |${suggestTop3Sql}""".stripMargin))
+           |$suggestTop3Sql""".stripMargin))
 
   /** FRESH-artifact suggest ([[graft.operators.Bm25Indexer.suggest]] with a
     * matching vocab stamp): the artifact was built from exactly this termDf
@@ -161,7 +160,7 @@ object SearchQueries {
            |  FROM documents),
            |vocab AS (SELECT term, count(DISTINCT doc_id) AS term_df FROM toks GROUP BY term),
            |qs AS (SELECT unnest(['tabel','qurey','custmer']) AS q),
-           |${suggestTop3Sql}""".stripMargin))
+           |$suggestTop3Sql""".stripMargin))
 
   private val a1RrfFusion = Q(
     (s, d) => {
@@ -254,7 +253,7 @@ object SearchQueries {
            |  FROM (SELECT doc_id, unnest(list_filter(string_split(text, ' '),
            |          x -> x <> '')) AS term FROM documents) GROUP BY term),
            |qs AS (SELECT unnest(['tabel','qurey','windw','scann','custmer','jion']) AS q),
-           |${suggestTop3Sql}""".stripMargin))
+           |$suggestTop3Sql""".stripMargin))
 
   /** Prefix autocomplete ([[graft.operators.Suggest.autocomplete]]): top
     * completions of "s" by (df desc, term) — one pushdown-friendly

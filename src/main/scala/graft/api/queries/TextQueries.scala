@@ -3,9 +3,6 @@ package graft.api.queries
 import graft.api.Queries._
 import graft.api.{Tables => D}
 import graft.api.queries.OracleSql._
-import graft.functions.{FilterDsl, HashingEmbedder}
-import graft.operators.Search
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -25,7 +22,7 @@ object TextQueries {
       s"""WITH toks AS (SELECT doc_id, ${tokens("text")} AS t FROM documents),
          |s AS (SELECT doc_id, $langScoresSql FROM toks)
          |SELECT doc_id, score_de, score_en, score_es, score_fr,
-         |${predLangSql}
+         |$predLangSql
          |FROM s ORDER BY doc_id""".stripMargin
     })
 

@@ -2,11 +2,6 @@ package graft.api.queries
 
 import graft.api.Queries._
 import graft.api.{Tables => D}
-import graft.api.queries.OracleSql._
-import graft.functions.{FilterDsl, HashingEmbedder}
-import graft.operators.Search
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** TPC-H shaped relational rows over the sf tables: multi-way joins,
