@@ -595,13 +595,15 @@ final class CollectionManager(
   /** Consistency audit over the collection's tables and derived indexes —
     * the fsck a long-lived index needs after crashes, partial writes, or
     * operator error. Every check is a count or an id anti-join on narrow
-    * projections; no text or vector column is read. Returns one row per
-    * check: (check, expected, actual, ok).
+    * projections; no vector column is read, and the only text read is the
+    * documents' stored `chunks` array, which `chunkless_documents` needs.
+    * Returns one row per check: (check, expected, actual, ok).
     */
   def fsck(name: String): DataFrame = {
     import spark.implicits._
     val m = readManifest(name)
-    val docs = Tables.open(spark, docsPath(name)).select("id")
+    val storedDocs = Tables.open(spark, docsPath(name))
+    val docs = storedDocs.select("id")
     val ch = Tables.open(spark, chunksPath(name)).select("chunkId", "documentId")
     val nDocs = docs.count()
     val nChunks = ch.count()
@@ -609,8 +611,10 @@ final class CollectionManager(
     val dupChunkIds = nChunks - ch.select("chunkId").distinct().count()
     val orphanChunks = ch.join(docs.withColumnRenamed("id", "documentId"),
       Seq("documentId"), "left_anti").count()
-    val chunklessDocs = docs.join(ch.select(col("documentId").as("id")),
-      Seq("id"), "left_anti").count()
+    // a document stored with an empty `chunks` array (update accepts one)
+    // rightly has no chunk rows; one with a non-empty array must have them
+    val chunklessDocs = storedDocs.filter(size(col("chunks")) > 0).select("id")
+      .join(ch.select(col("documentId").as("id")), Seq("id"), "left_anti").count()
     val base = Seq(
       ("manifest_documents", nDocs, m.numberOfDocuments.toLong),
       ("manifest_chunks", nChunks, m.numberOfChunks.toLong),

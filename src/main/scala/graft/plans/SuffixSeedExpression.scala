@@ -30,10 +30,12 @@ import org.apache.spark.unsafe.types.UTF8String
   *    one precomputed codepoint-offset walk — O(n + windows·w) bytes, no
   *    interpreted lambda, no per-window sequence/boxing.
   *
-  * Parity is EXACT for any input (ASCII fast path, codepoint fallback with
+  * Parity is EXACT for valid UTF-8 (ASCII fast path, codepoint fallback with
   * identical semantics — SuffixSeedSpec pins both against the declarative
   * forms on random mixed-alphabet strings; the suffix/dedup oracles replay
-  * end-to-end in DuckDB).
+  * end-to-end in DuckDB). On a multi-byte sequence cut short by the end of
+  * the text, the packed codes still equal `ascii()` (U+FFFD), and a window
+  * ends at the text's last byte, where Spark's `substring` reads past it.
   */
 object SuffixSeedOps extends Serializable {
 
@@ -103,9 +105,15 @@ object SuffixSeedOps extends Serializable {
     new GenericArrayData(out)
   }
 
+  /** The codepoint starting at byte `at`. A sequence cut short by the end of
+    * the text decodes to U+FFFD, the replacement character, as `ascii()`
+    * decodes it, instead of reading past the array.
+    */
   private def codePointAt(b: Array[Byte], at: Int): Int = {
     val c = b(at) & 0xFF
-    if (c < 0x80) c
+    val len = if (c < 0x80) 1 else if (c < 0xE0) 2 else if (c < 0xF0) 3 else 4
+    if (at + len > b.length) 0xFFFD
+    else if (c < 0x80) c
     else if (c < 0xE0) ((c & 0x1F) << 6) | (b(at + 1) & 0x3F)
     else if (c < 0xF0)
       ((c & 0x0F) << 12) | ((b(at + 1) & 0x3F) << 6) | (b(at + 2) & 0x3F)

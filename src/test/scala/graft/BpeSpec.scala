@@ -122,7 +122,7 @@ class BpeSpec extends AnyFunSuite with SparkSuite {
 
   test("fixed-merge gated model: encode goldens match the hand-traced greedy loop") {
     // The same 24-merge artifact the bpe_encode oracle replays in DuckDB
-    // (Queries.bpeFixedMerges). Goldens hand-traced with the one-merge-per-step
+    // (LifecycleQueries.bpeFixedMerges). Goldens hand-traced with the one-merge-per-step
     // leftmost-lowest-rank loop; a semantics change in encodeWord would break
     // this spec and the oracle together.
     val model = Bpe.BpeModel(Seq(

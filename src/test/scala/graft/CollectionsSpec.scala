@@ -259,6 +259,16 @@ class CollectionsSpec extends AnyFunSuite with SparkSuite {
     assert(!report("manifest_chunks"))
     assert(report("chunkless_documents")) // untouched dimension stays green
 
+    // a document whose stored chunks array is non-empty but which has no
+    // chunk rows (they were lost) is chunkless: fsck goes red
+    val docsDir = s"$tmp/fc/documents"
+    spark.read.parquet(docsDir).limit(1)
+      .withColumn("id", lit("lost-chunks"))
+      .write.mode("append").parquet(docsDir)
+    val lost = cm.fsck("fc").collect()
+      .map(r => r.getAs[String]("check") -> r.getAs[Boolean]("ok")).toMap
+    assert(!lost("chunkless_documents"))
+
     // reindex rebuilds the derived indexes from the (corrupted) chunks table
     // and fsck's index-consistency checks go green again against it
     cm.reindex("fc")
@@ -473,11 +483,8 @@ class CollectionsSpec extends AnyFunSuite with SparkSuite {
       .foreach { case (what, i) => assert(flat(i) === bucketed(i), what) }
     assert(cm.readManifest("lf").numberOfDocuments === 5) // d1 gone, d4 added
     assert(cm.chunks("lf").filter(col("documentId") === "d5").count() === 0)
-    // fsck flags the deliberately emptied doc as chunkless (a false positive,
-    // see the `fsck` FOUND line in CHANGES.md); every other check stays green
-    layouts.foreach { case (n, _) =>
-      assert((fsckRed(n) - "chunkless_documents").isEmpty, s"$n after emptying")
-    }
+    // a doc stored with an empty chunks array is not chunkless: fsck stays green
+    layouts.foreach { case (n, _) => assert(fsckRed(n).isEmpty, s"$n after emptying") }
   }
 
   test("bucketed layout: delete rewrites only dirty buckets; HWM survives") {

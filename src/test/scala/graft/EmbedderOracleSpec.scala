@@ -8,8 +8,8 @@ import org.scalatest.funsuite.AnyFunSuite
 import scala.util.hashing.MurmurHash3
 
 /** Pins the exact murmur3_x86_32 values the m1_embed_pipeline oracle replays in
-  * DuckDB SQL (Queries.scala mhMul/mhRotl/mhK/mhMixLambda). The goldens below
-  * were computed independently (bit-level replica of the public murmur3
+  * DuckDB SQL (api/queries/OracleSql.scala mhMul/mhRotl/mhK/mhMixLambda).
+  * The goldens below were computed independently (bit-level replica of the public murmur3
   * finalization, cross-checked against DuckDB's replay) — if Scala's
   * `MurmurHash3.stringHash` ever changed, this spec and the oracle would fail
   * together, loudly.

@@ -99,6 +99,44 @@ class SuffixSeedSpec extends AnyFunSuite with SparkSuite {
     }
   }
 
+  test("truncated UTF-8: packed_char_windows equals ascii(), char_windows stops at the end") {
+    // a lead byte whose continuation bytes are missing: at the end of the
+    // text, before ASCII, and with one of its two continuation bytes
+    val d = spark.sql("""SELECT id, cast(unhex(h) AS STRING) AS text FROM VALUES
+      |  (1L, '41E3'), (2L, 'C3'), (3L, 'E341'), (4L, '41E382'), (5L, 'F09F98'),
+      |  (6L, '61C3A9E3') AS t(id, h)""".stripMargin)
+    val legacyCodes = d.select(col("id"), expr(
+      """CASE WHEN length(text) >= 1
+        |  THEN transform(sequence(1, length(text)), i -> CAST(ascii(substring(text, i, 1)) AS BIGINT))
+        |  ELSE CAST(array() AS ARRAY<BIGINT>) END""".stripMargin).as("a"))
+    val kernelCodes = d.select(col("id"),
+      coalesce(packedCharWindows(col("text"), 1), expr("CAST(array() AS ARRAY<BIGINT>)")).as("a"))
+    assert(legacyCodes.orderBy("id").collect().map(_.toString).toSeq ===
+      kernelCodes.orderBy("id").collect().map(_.toString).toSeq)
+    // the windows keep every byte of the text and stop at its end; the
+    // interpreted substring copies the cut sequence's missing bytes from
+    // past the end of the value, so it can only be matched up to there
+    for (w <- Seq(1, 2); fullOnly <- Seq(false, true)) {
+      val last = if (fullOnly) s"length(text) - ${w - 1}" else "length(text)"
+      val legacy = d.select(col("id"), expr(
+        s"""CASE WHEN length(text) >= ${if (fullOnly) w else 1}
+           |  THEN transform(sequence(1, $last), i -> hex(substring(text, i, $w)))
+           |  ELSE CAST(array() AS ARRAY<STRING>) END""".stripMargin).as("a"))
+      val kernel = d.select(col("id"),
+        coalesce(transform(charWindows(col("text"), w, fullOnly), hex(_)),
+          expr("CAST(array() AS ARRAY<STRING>)")).as("k"))
+      legacy.join(kernel, "id").collect().foreach { r =>
+        val (l, k) = (r.getSeq[String](1), r.getSeq[String](2))
+        assert(l.size === k.size && l.zip(k).forall { case (a, b) => a.startsWith(b) },
+          s"width $w fullOnly $fullOnly id ${r.get(0)}: $l vs $k")
+      }
+    }
+    val first = d.where("id = 1")
+      .select(transform(charWindows(col("text"), 2, fullOnly = false), hex(_)))
+      .head().getSeq[String](0)
+    assert(first === Seq("41E3", "E3"))
+  }
+
   test("JoinedTokenWindows == declarative shingle/window transforms") {
     val d = docs().select(col("id"),
       graft.plans.TokenizeFunctions.engineTokenize(

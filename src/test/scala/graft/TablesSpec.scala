@@ -141,28 +141,36 @@ class TablesSpec extends AnyFunSuite with SparkSuite {
     assert(state() === before, "compaction changed search results or fsck")
   }
 
-  /** Files under `src/main/scala`, other than `core/Tables.scala`, whose text
-    * contains `needle`.
+  /** Files under `src/main/scala`, other than `allowed` (a path below
+    * `graft/`), whose text contains `needle`.
     */
-  private def sourcesOutsideTables(needle: String): Seq[String] = {
+  private def sourcesOutside(allowed: String, needle: String): Seq[String] = {
     val root = Paths.get("src/main/scala")
     assume(Files.isDirectory(root), "run from the repository root")
     import scala.jdk.CollectionConverters._
     Files.walk(root).iterator().asScala
-      .filter(p => p.toString.endsWith(".scala") && !p.endsWith(Paths.get("graft/core/Tables.scala")))
+      .filter(p => p.toString.endsWith(".scala") && !p.endsWith(Paths.get("graft", allowed)))
       .filter(p => new String(Files.readAllBytes(p), "UTF-8").contains(needle))
       .map(root.relativize(_).toString).toSeq.sorted
   }
 
   test("no source file but core/Tables.scala opens parquet with .read.parquet(") {
-    val offenders = sourcesOutsideTables(".read.parquet(")
+    val offenders = sourcesOutside("core/Tables.scala", ".read.parquet(")
     assert(offenders.isEmpty,
       s"open tables with graft.core.Tables.open, not .read.parquet(: ${offenders.mkString(", ")}")
   }
 
   test("no source file but core/Tables.scala swaps directories with .rename(") {
-    val offenders = sourcesOutsideTables(".rename(")
+    val offenders = sourcesOutside("core/Tables.scala", ".rename(")
     assert(offenders.isEmpty,
       s"replace tables with graft.core.Tables.replace, not .rename(: ${offenders.mkString(", ")}")
+  }
+
+  test("no source file but api/queries/OracleSql.scala writes the DuckDB tokenizer or BM25 weight") {
+    for (needle <- Seq("regexp_split_to_array(lower(", "ln(1 + (corpus.n - df.df + 0.5)")) {
+      val offenders = sourcesOutside("api/queries/OracleSql.scala", needle)
+      assert(offenders.isEmpty,
+        s"use OracleSql.tokens / bm25Ctes, not a pasted `$needle`: ${offenders.mkString(", ")}")
+    }
   }
 }
