@@ -71,20 +71,38 @@ object Queries {
     D.embeddings(s, d).filter(col("vec_id") === 0)
       .select("embedding").head().getSeq[Float](0).toArray
 
-  /** `documents` indexed as (chunkId = doc_id, indexedData = text) into a
-    * [[Bm25Indexer]] under a fresh temp dir named by `prefix`; `phrase` also
-    * builds the positional artifact in the same pass. Returns the indexer and
-    * its input, which lifecycle rows slice into removed and replacement rows.
+  /** `documents` as indexer input: chunkId = doc_id, indexedData = text. */
+  private def indexerInput(s: SparkSession, d: String): DataFrame =
+    D.documents(s, d).select(col("doc_id").as("chunkId"), col("text").as("indexedData"))
+
+  /** A [[Bm25Indexer]] over [[indexerInput]] under a fresh temp dir named by
+    * `prefix`; `phrase` also builds the positional artifact in the same pass.
     */
   private[api] def indexDocuments(s: SparkSession, d: String, prefix: String,
                                   selectByRounded: Option[Int] = None,
-                                  phrase: Boolean = false): (Bm25Indexer, DataFrame) = {
+                                  phrase: Boolean = false): Bm25Indexer = {
     val dir = java.nio.file.Files.createTempDirectory(prefix).toString
-    val docs = D.documents(s, d)
-      .select(col("doc_id").as("chunkId"), col("text").as("indexedData"))
+    val docs = indexerInput(s, d)
     val idx = new Bm25Indexer(s, dir, chunksPath = s"$dir/unused", selectByRounded = selectByRounded)
     if (phrase) idx.indexWithPhrase(docs) else idx.index(docs)
-    (idx, docs)
+    idx
+  }
+
+  /** The lifecycle rows' one incremental merge into an [[indexDocuments]]
+    * index: doc ids divisible by 13 or 7 leave, and the %7 ones that are not
+    * %13 return under fresh ids past 1e7 with `appended` added to their text
+    * (removed ids never return — the tombstone-soundness contract).
+    */
+  private[api] def deleteAndReplace(idx: Bm25Indexer, s: SparkSession, d: String,
+                                    appended: String): Unit = {
+    val docs = indexerInput(s, d)
+    val removed = docs.filter(col("chunkId") % 13 === 0 || col("chunkId") % 7 === 0)
+      .select(col("chunkId").as("docId"), col("indexedData"))
+    val replacement = docs
+      .filter(col("chunkId") % 7 === 0 && col("chunkId") % 13 =!= 0)
+      .select((col("chunkId") + 10000000L).as("chunkId"),
+        concat(col("indexedData"), lit(appended)).as("indexedData"))
+    idx.updateIncremental(removed, replacement)
   }
 
   /** The families' maps as one; a name that two families register is an error. */

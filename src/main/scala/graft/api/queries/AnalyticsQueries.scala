@@ -3,12 +3,33 @@ package graft.api.queries
 import graft.api.Queries._
 import graft.api.{Tables => D}
 import graft.api.queries.OracleSql._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Graph and sketch analytics: triangles, BFS, PageRank, communities,
   * KMV, count-min, quantile histograms and HyperLogLog.
   */
 object AnalyticsQueries {
+
+  /** Suppliers linked by a shared January-1997 order, in both directions. */
+  private def supplierEdges(s: SparkSession, d: String): DataFrame = {
+    val li = D.lineitem(s, d); val o = D.orders(s, d)
+    val os = o.filter(col("o_orderdate") >= lit("1997-01-01") &&
+      col("o_orderdate") < lit("1997-02-01"))
+    val sl = li.join(os, li("l_orderkey") === os("o_orderkey"))
+      .select(col("l_orderkey").as("k"), col("l_suppkey").as("sk"))
+    sl.join(sl.toDF("k", "sk2"), "k")
+      .filter(col("sk") =!= col("sk2"))
+      .select(col("sk").as("src"), col("sk2").as("dst"))
+  }
+
+  /** One customer → supplier edge (`c<custkey>` → `s<suppkey>`) per line item. */
+  private def customerSupplierEdges(s: SparkSession, d: String): DataFrame = {
+    val li = D.lineitem(s, d); val o = D.orders(s, d)
+    li.join(o, li("l_orderkey") === o("o_orderkey"))
+      .select(concat(lit("c"), col("o_custkey")).as("src"),
+        concat(lit("s"), col("l_suppkey")).as("dst"))
+  }
 
   /** Per-node triangle counts over the co-supply graph (suppliers that ship
     * within the same order, one month of orders) —
@@ -18,14 +39,7 @@ object AnalyticsQueries {
     */
   private val graphTriangles = Q(
     (s, d) => {
-      val li = D.lineitem(s, d); val o = D.orders(s, d)
-      val os = o.filter(col("o_orderdate") >= lit("1997-01-01") &&
-        col("o_orderdate") < lit("1997-02-01"))
-      val sl = li.join(os, li("l_orderkey") === os("o_orderkey"))
-        .select(col("l_orderkey").as("k"), col("l_suppkey").as("sk"))
-      val edges = sl.join(sl.toDF("k", "sk2"), "k")
-        .filter(col("sk") =!= col("sk2"))
-        .select(col("sk").as("src"), col("sk2").as("dst"))
+      val edges = supplierEdges(s, d)
       graft.operators.Graphs.triangleCounts(edges)
         .orderBy(col("n_triangles").desc, col("node"))
         .limit(20)
@@ -54,14 +68,10 @@ object AnalyticsQueries {
     */
   private val graphBfs = Q(
     (s, d) => {
-      val li = D.lineitem(s, d); val o = D.orders(s, d)
       // distinct + checkpoint ONCE: both the source-node aggregate and the
       // BFS rounds read the materialized edge set instead of re-deriving the
       // lineitem ⋈ orders plan (the derivation ran twice before this)
-      val edges = li.join(o, li("l_orderkey") === o("o_orderkey"))
-        .select(concat(lit("c"), col("o_custkey")).as("src"),
-          concat(lit("s"), col("l_suppkey")).as("dst"))
-        .distinct().localCheckpoint()
+      val edges = customerSupplierEdges(s, d).distinct().localCheckpoint()
       val src = edges.agg(min("src").as("node"))
       graft.operators.Graphs.hopDistances(edges, src, maxHops = 3)
         .groupBy("hops")
@@ -99,14 +109,7 @@ object AnalyticsQueries {
     */
   private val graphCommunities = Q(
     (s, d) => {
-      val li = D.lineitem(s, d); val o = D.orders(s, d)
-      val os = o.filter(col("o_orderdate") >= lit("1997-01-01") &&
-        col("o_orderdate") < lit("1997-02-01"))
-      val sl = li.join(os, li("l_orderkey") === os("o_orderkey"))
-        .select(col("l_orderkey").as("k"), col("l_suppkey").as("sk"))
-      val edges = sl.join(sl.toDF("k", "sk2"), "k")
-        .filter(col("sk") =!= col("sk2"))
-        .select(col("sk").as("src"), col("sk2").as("dst"))
+      val edges = supplierEdges(s, d)
       graft.operators.Graphs.labelPropagation(edges, iters = 3)
         .orderBy("node")
     },
@@ -143,10 +146,7 @@ object AnalyticsQueries {
     */
   private val graphPagerank = Q(
     (s, d) => {
-      val li = D.lineitem(s, d); val o = D.orders(s, d)
-      val edges = li.join(o, li("l_orderkey") === o("o_orderkey"))
-        .select(concat(lit("c"), col("o_custkey")).as("src"),
-          concat(lit("s"), col("l_suppkey")).as("dst"))
+      val edges = customerSupplierEdges(s, d)
       graft.operators.Graphs.pageRank(edges, iters = 5)
         .select(col("node"), round(col("rank"), 6).as("pagerank"))
         .orderBy(round(col("rank"), 6).desc, col("node"))
@@ -183,10 +183,7 @@ object AnalyticsQueries {
     */
   private val graphPagerankDangling = Q(
     (s, d) => {
-      val li = D.lineitem(s, d); val o = D.orders(s, d)
-      val edges = li.join(o, li("l_orderkey") === o("o_orderkey"))
-        .select(concat(lit("c"), col("o_custkey")).as("src"),
-          concat(lit("s"), col("l_suppkey")).as("dst"))
+      val edges = customerSupplierEdges(s, d)
       graft.operators.Graphs.pageRank(edges, iters = 5,
           redistributeDangling = true)
         .select(col("node"), round(col("rank"), 6).as("pagerank"))

@@ -523,12 +523,7 @@ object DedupQueries {
       .select(col("id_a"), col("id_b"), round(col("containment"), 6).as("containment"))
       .orderBy(round(col("containment"), 6).desc, col("id_a").asc, col("id_b").asc)
       .limit(20),
-    Some("""WITH h AS (
-           |  SELECT doc_id, text,
-           |    CASE WHEN length(text) < 7 THEN [substring(md5(text), 1, 8)]
-           |    ELSE list_transform(generate_series(1, length(text) - 6),
-           |           i -> substring(md5(substring(text, i, 7)), 1, 8)) END AS hs
-           |  FROM documents),
+    Some(s"""WITH $charHashesCte,
            |fp AS (
            |  SELECT doc_id, list_distinct(
            |    CASE WHEN len(hs) <= 5 THEN [list_min(hs)]

@@ -22,7 +22,7 @@ object MatchQueries {
     */
   private val qlBooleanIndex = Q(
     (s, d) => {
-      val (idx, _) = indexDocuments(s, d, "graft_bool_idx_", selectByRounded = Some(5))
+      val idx = indexDocuments(s, d, "graft_bool_idx_", selectByRounded = Some(5))
       idx.booleanSearch("(join AND vector) OR (spark NOT hash)", 20)
         .select(col("chunkId").as("doc_id"), round(col("score"), 5).as("score"))
         .orderBy(col("score").desc, col("doc_id").asc)
@@ -46,7 +46,7 @@ object MatchQueries {
     */
   private val qlDoubleNegation = Q(
     (s, d) => {
-      val (idx, _) = indexDocuments(s, d, "graft_nnf_idx_", selectByRounded = Some(5))
+      val idx = indexDocuments(s, d, "graft_nnf_idx_", selectByRounded = Some(5))
       idx.booleanSearch("NOT (NOT vector AND NOT join) NOT NOT spark", 20)
         .select(col("chunkId").as("doc_id"), round(col("score"), 5).as("score"))
         .orderBy(col("score").desc, col("doc_id").asc)
@@ -119,7 +119,7 @@ object MatchQueries {
     */
   private val qlBooleanPhraseIndex = Q(
     (s, d) => {
-      val (idx, _) = indexDocuments(s, d, "graft_boolph_idx_", selectByRounded = Some(5), phrase = true)
+      val idx = indexDocuments(s, d, "graft_boolph_idx_", selectByRounded = Some(5), phrase = true)
       idx.booleanSearch("\"hash join\" OR (spark NOT vector)", 20)
         .select(col("chunkId").as("doc_id"), round(col("score"), 5).as("score"))
         .orderBy(col("score").desc, col("doc_id").asc)
@@ -177,7 +177,7 @@ object MatchQueries {
     */
   private val qlPrefixIndex = Q(
     (s, d) => {
-      val (idx, _) = indexDocuments(s, d, "graft_prefix_idx_", selectByRounded = Some(5))
+      val idx = indexDocuments(s, d, "graft_prefix_idx_", selectByRounded = Some(5))
       idx.booleanSearch("vec* AND (spark OR join) NOT hash", 20)
         .select(col("chunkId").as("doc_id"), round(col("score"), 5).as("score"))
         .orderBy(col("score").desc, col("doc_id").asc)
@@ -205,7 +205,7 @@ object MatchQueries {
     */
   private val qlPhrasePrefixIndex = Q(
     (s, d) => {
-      val (idx, _) = indexDocuments(s, d, "graft_phpre_idx_", selectByRounded = Some(5), phrase = true)
+      val idx = indexDocuments(s, d, "graft_phpre_idx_", selectByRounded = Some(5), phrase = true)
       idx.booleanSearch("\"hash jo\"* OR NEAR(spark vec*, 6)", 20)
         .select(col("chunkId").as("doc_id"), round(col("score"), 5).as("score"))
         .orderBy(col("score").desc, col("doc_id").asc)
@@ -237,7 +237,7 @@ object MatchQueries {
     */
   private val qlAnchorIndex = Q(
     (s, d) => {
-      val (idx, _) = indexDocuments(s, d, "graft_anchor_idx_", selectByRounded = Some(5), phrase = true)
+      val idx = indexDocuments(s, d, "graft_anchor_idx_", selectByRounded = Some(5), phrase = true)
       idx.booleanSearch("(^key AND spark) OR ^ta* OR ^\"the fast\"", 20)
         .select(col("chunkId").as("doc_id"), round(col("score"), 5).as("score"))
         .orderBy(col("score").desc, col("doc_id").asc)
@@ -262,7 +262,7 @@ object MatchQueries {
     */
   private val qlMatchFused = Q(
     (s, d) => {
-      val (idx, _) = indexDocuments(s, d, "graft_matchfuse_")
+      val idx = indexDocuments(s, d, "graft_matchfuse_")
       val gate = idx.booleanCandidates("(join AND vector) OR (spark NOT hash)")
         .select(col("docId").as("vec_id"))
       val emb = D.embeddings(s, d).filter(col("vec_id") =!= 0)
@@ -335,7 +335,7 @@ object MatchQueries {
     */
   private val qlBooleanNearIndex = Q(
     (s, d) => {
-      val (idx, _) = indexDocuments(s, d, "graft_boolnear_idx_", selectByRounded = Some(5), phrase = true)
+      val idx = indexDocuments(s, d, "graft_boolnear_idx_", selectByRounded = Some(5), phrase = true)
       idx.booleanSearch("NEAR(spark vector, 8) OR (join NOT hash)", 20)
         .select(col("chunkId").as("doc_id"), round(col("score"), 5).as("score"))
         .orderBy(col("score").desc, col("doc_id").asc)
@@ -362,7 +362,7 @@ object MatchQueries {
     */
   private val qlNearIndex = Q(
     (s, d) => {
-      val (idx, _) = indexDocuments(s, d, "graft_near_idx_", phrase = true)
+      val idx = indexDocuments(s, d, "graft_near_idx_", phrase = true)
       idx.near(Seq("spark", "vector", "window"), window = 12, k = 25)
         .select(col("docId").as("doc_id"), col("span_len"), col("span_start"))
         .orderBy(col("span_len"), col("doc_id"))
@@ -386,14 +386,8 @@ object MatchQueries {
     */
   private val phraseLifecycle = Q(
     (s, d) => {
-      val (idx, docs) = indexDocuments(s, d, "graft_phrase_lsm_", phrase = true)
-      val removed = docs.filter(col("chunkId") % 13 === 0 || col("chunkId") % 7 === 0)
-        .select(col("chunkId").as("docId"), col("indexedData"))
-      val replacement = docs
-        .filter(col("chunkId") % 7 === 0 && col("chunkId") % 13 =!= 0)
-        .select((col("chunkId") + 10000000L).as("chunkId"),
-          concat(col("indexedData"), lit(" hash join hash join")).as("indexedData"))
-      idx.updateIncremental(removed, replacement)
+      val idx = indexDocuments(s, d, "graft_phrase_lsm_", phrase = true)
+      deleteAndReplace(idx, s, d, " hash join hash join")
       idx.phrase(Seq("hash", "join"), k = 200)
         .select(col("docId").as("doc_id"), col("phrase_tf"), col("first_pos"))
         .orderBy(col("phrase_tf").desc, col("doc_id"))

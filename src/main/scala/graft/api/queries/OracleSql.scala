@@ -388,6 +388,17 @@ private[api] object OracleSql {
        |    SELECT g, count(DISTINCT doc_id) AS nd FROM wins GROUP BY g) WHERE nd >= 2),
        |dup AS (SELECT doc_id, off AS s, off + $len AS e FROM wins JOIN sh USING (g))""".stripMargin
 
+  /** `h(doc_id, text, hs)`: the first 8 hex digits of the md5 of every
+    * 7-char window of documents.text (of the whole text when shorter).
+    */
+  val charHashesCte =
+    """h AS (
+      |  SELECT doc_id, text,
+      |    CASE WHEN length(text) < 7 THEN [substring(md5(text), 1, 8)]
+      |    ELSE list_transform(generate_series(1, length(text) - 6),
+      |           i -> substring(md5(substring(text, i, 7)), 1, 8)) END AS hs
+      |  FROM documents)""".stripMargin
+
   /** `bw`, `tw` and `dup(doc_id, s, e)`: every 16-char window of a train doc
     * in `tr(doc_id, text)` that also occurs in the benchmark `be(text)`.
     */

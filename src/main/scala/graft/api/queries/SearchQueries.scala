@@ -68,7 +68,7 @@ object SearchQueries {
     */
   private val t2bBm25Postings = Q(
     (s, d) => {
-      val (idx, _) = indexDocuments(s, d, "graft_bm25_idx_", selectByRounded = Some(5))
+      val idx = indexDocuments(s, d, "graft_bm25_idx_", selectByRounded = Some(5))
       idx.search(searchQuery, 10)
         .select(col("chunkId").as("doc_id"), round(col("score"), 5).as("score"))
         .orderBy(col("score").desc, col("doc_id").asc)
@@ -87,14 +87,8 @@ object SearchQueries {
     */
   private val t2cBm25LsmSearch = Q(
     (s, d) => {
-      val (idx, docs) = indexDocuments(s, d, "graft_bm25_lsm_", selectByRounded = Some(5))
-      val removed = docs.filter(col("chunkId") % 13 === 0 || col("chunkId") % 7 === 0)
-        .select(col("chunkId").as("docId"), col("indexedData"))
-      val replacement = docs
-        .filter(col("chunkId") % 7 === 0 && col("chunkId") % 13 =!= 0)
-        .select((col("chunkId") + 10000000L).as("chunkId"),
-          concat(col("indexedData"), lit(" updated")).as("indexedData"))
-      idx.updateIncremental(removed, replacement)
+      val idx = indexDocuments(s, d, "graft_bm25_lsm_", selectByRounded = Some(5))
+      deleteAndReplace(idx, s, d, " updated")
       idx.search(searchQuery, 10)
         .select((col("chunkId") % 10000000L).as("doc_id"),
           round(col("score"), 5).as("score"))
@@ -119,15 +113,9 @@ object SearchQueries {
     */
   private val suggestLifecycle = Q(
     (s, d) => {
-      val (idx, docs) = indexDocuments(s, d, "graft_suggest_lsm_")
+      val idx = indexDocuments(s, d, "graft_suggest_lsm_")
       idx.buildSuggestKeys() // over the PRE-update vocabulary — deliberately stale
-      val removed = docs.filter(col("chunkId") % 13 === 0 || col("chunkId") % 7 === 0)
-        .select(col("chunkId").as("docId"), col("indexedData"))
-      val replacement = docs
-        .filter(col("chunkId") % 7 === 0 && col("chunkId") % 13 =!= 0)
-        .select((col("chunkId") + 10000000L).as("chunkId"),
-          concat(col("indexedData"), lit(" qqnewterm")).as("indexedData"))
-      idx.updateIncremental(removed, replacement)
+      deleteAndReplace(idx, s, d, " qqnewterm")
       idx.suggest(Seq("tabel", "qurey", "qqnewtrm"), maxEdits = 2, topK = 3)
         .orderBy("q", "rank")
     },
@@ -151,7 +139,7 @@ object SearchQueries {
     */
   private val suggestFresh = Q(
     (s, d) => {
-      val (idx, _) = indexDocuments(s, d, "graft_suggest_fresh_")
+      val idx = indexDocuments(s, d, "graft_suggest_fresh_")
       idx.buildSuggestKeys()
       idx.suggest(Seq("tabel", "qurey", "custmer"), maxEdits = 2, topK = 3)
         .orderBy("q", "rank")

@@ -600,12 +600,7 @@ object TextQueries {
       .select(col("doc_id"), size(col("fingerprints")).cast("long").as("n_fp"),
         array_min(col("fingerprints")).as("min_fp"), md5(col("text")).as("h"))
       .orderBy("doc_id"),
-    Some("""WITH h AS (
-           |  SELECT doc_id, text,
-           |    CASE WHEN length(text) < 7 THEN [substring(md5(text), 1, 8)]
-           |    ELSE list_transform(generate_series(1, length(text) - 6),
-           |           i -> substring(md5(substring(text, i, 7)), 1, 8)) END AS hs
-           |  FROM documents),
+    Some(s"""WITH $charHashesCte,
            |fp AS (
            |  SELECT doc_id, text, list_distinct(
            |    CASE WHEN len(hs) <= 5 THEN [list_min(hs)]
