@@ -14,7 +14,8 @@ object CurationQueries {
 
   /** The composed curation pipeline a training-data run actually executes:
     * exact-dup flag + language-ID + quality score → one keep/drop decision per
-    * document. Each signal is its own scan-free reuse of the operators above.
+    * document. Each signal is the operator that `dedup_exact`, `text_langid`
+    * or `text_quality` gates, reused with no extra scan.
     */
   private val pipelineFilter = Q(
     (s, d) => {

@@ -227,18 +227,18 @@ private[api] object OracleSql {
   // because BIGINT×BIGINT would overflow before the mask. Constants are the
   // public murmur3 constants (0xcc9e2d51, 0x1b873593, 0xe6546b64, 0x85ebca6b,
   // 0xc2b2ae35) in decimal.
-  def mhMul(e: String, c: Long): String =
+  private def mhMul(e: String, c: Long): String =
     s"CAST(((CAST($e AS HUGEINT) * $c) % 4294967296) AS BIGINT)"
 
-  def mhRotl(e: String, r: Int): String =
+  private def mhRotl(e: String, r: Int): String =
     s"(((($e) << $r) | (($e) >> ${32 - r})) & 4294967295)"
 
   /** mixLast's k-transform: k*c1, rotl15, k*c2 — applied to a 32-bit block. */
-  def mhK(d: String): String =
+  private def mhK(d: String): String =
     mhMul(mhRotl(mhMul(d, 3432918353L), 15), 461845907L)
 
   /** One mix round as a list_reduce lambda body: h ← (rotl13(h ⊕ K(d)))·5 + c. */
-  def mhMixLambda: String =
+  private def mhMixLambda: String =
     s"CAST((${mhRotl(s"xor(h, ${mhK("d")})", 13)} * 5 + 3864292196) % 4294967296 AS BIGINT)"
 
   /** The murmur-embed → cosine-top-10 CTE chain, shared by `m1_embed_pipeline`
