@@ -402,6 +402,40 @@ class StreamingSpec extends AnyFunSuite with SparkSuite {
       .map(_.getAs[String]("documentId")).contains("b"))
   }
 
+  test("streaming update advances the manifest watermark per batch and never rewinds it") {
+    import spark.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+
+    val tmp = Files.createTempDirectory("graft-stream-wm").toString
+    val cm = new CollectionManager(spark, s"$tmp/coll",
+      new HashingEmbedder(dim = 16), new TextSplitter(50, 10))
+    val stream = MemoryStream[(String, String, String, String)]
+    val docs = stream.toDF().toDF("id", "url", "lastModifiedAt", "text")
+      .withColumn("metadata", map(lit("lastModifiedAt"), col("lastModifiedAt")))
+      .select("id", "url", "metadata", "text")
+    def batch(rows: (String, String, String, String)*): String = {
+      stream.addData(rows: _*)
+      StreamingUpdate.collectionUpdateWriter(docs, cm, "wm", s"$tmp/ckpt")
+        .start().awaitTermination(60000)
+      cm.readManifest("wm").lastModifiedDocumentTime
+    }
+
+    // the first batch creates the collection; the next two update it through
+    // foreachBatch, each moving the watermark to its own batch's max
+    assert(batch(("a", "ua", "2026-01-01T00:00:00", "alpha document about spark")) ===
+      "2026-01-01T00:00:00")
+    assert(batch(
+      ("b", "ub", "2026-02-01T00:00:00", "beta document about joins"),
+      ("c", "uc", "2026-02-03T00:00:00", "gamma document about shuffles")) ===
+      "2026-02-03T00:00:00")
+    assert(batch(("a", "ua", "2026-03-05T00:00:00", "alpha rewritten about partitions")) ===
+      "2026-03-05T00:00:00")
+    // a backdated batch replaces a document but holds the cursor
+    assert(batch(("b", "ub", "2025-06-01T00:00:00", "beta restored from an old backup")) ===
+      "2026-03-05T00:00:00")
+    assert(cm.readManifest("wm").numberOfDocuments === 3)
+  }
+
   test("stream-static enrichment join broadcasts the dimension") {
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
