@@ -184,7 +184,8 @@ object Cli {
         // (source offsets replace the stored-mtime watermark). --once drains
         // available files and exits (the cron/catch-up shape, and what the
         // e2e spec drives); otherwise a ProcessingTime trigger keeps watching.
-        // --ivf appends each batch's vectors into an existing IVF index.
+        // --ivf appends each batch's vectors into an existing IVF index; the
+        // merge tombstones the replaced documents' old vectors there.
         val name = req("collection")
         val stream = Converters.files(
           FilesSource.readStream(spark, req("path"),

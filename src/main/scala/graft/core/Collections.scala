@@ -303,14 +303,14 @@ final class CollectionManager(
   }
 
   /** A mutation's one layout decision, which [[live]] and [[put]] match on:
-    * None on the flat layout (n = 0), which runs no job here, else
-    * `Some((n, dirty))`, the buckets the document ids in `ids` (`id` column)
-    * fall in — bounded by n, so the collect is a ≤ n-int driver list.
+    * None on the flat layout (n = 0), else `Some((n, dirty))`, the buckets
+    * the document ids in `ids` (a local `id` frame) fall in. The bucket
+    * expression folds into the local relation, so neither layout runs a job.
     */
   private def dirtyBuckets(ids: DataFrame, n: Int): Option[(Int, Seq[Int])] =
     if (n == 0) None
-    else Some((n, ids.select(bucketOf(col("id"), n).as("b")).distinct()
-      .collect().map(_.getInt(0)).toSeq.sorted))
+    else Some((n, ids.select(bucketOf(col("id"), n)).collect()
+      .map(_.getInt(0)).distinct.toSeq.sorted))
 
   /** The rows of the table at `path` that a mutation rewrites: the whole
     * table on the flat layout, else only the dirty bucket dirs (pruned by
@@ -367,7 +367,8 @@ final class CollectionManager(
     val (nChunks, maxId, nDocs) = manifestStats(name)
     val m = Model.Manifest(
       collectionName = name, updatedTime = nowIso,
-      lastModifiedDocumentTime = latestModified(persisted),
+      lastModifiedDocumentTime =
+        Option(persisted.agg(max(modifiedAt(persisted))).head().getString(0)).getOrElse(""),
       numberOfDocuments = nDocs, numberOfChunks = nChunks,
       lastIndexItemId = maxId,
       indexers = Seq("vector_exact_l2", "bm25"),
@@ -378,13 +379,10 @@ final class CollectionManager(
     m
   }
 
-  private def latestModified(docs: DataFrame): String =
-    if (docs.columns.contains("metadata"))
-      docs.agg(max(element_at(col("metadata"), "lastModifiedAt"))).head().getString(0) match {
-        case null => ""
-        case s    => s
-      }
-    else ""
+  /** Each document's `lastModifiedAt` (null without a metadata column). */
+  private def modifiedAt(docs: DataFrame): Column =
+    if (docs.columns.contains("metadata")) element_at(col("metadata"), "lastModifiedAt")
+    else lit(null).cast("string")
 
   /** Manifest counters (numberOfChunks, lastIndexItemId, numberOfDocuments)
     * from Parquet FOOTERS — zero Spark jobs, O(#files) metadata reads instead
@@ -421,27 +419,29 @@ final class CollectionManager(
     * two vector spaces in one chunks table. The manifest identity makes both
     * loud (mirrors the reference's index-info name check).
     */
-  private def requireMatchingEmbedder(name: String): Unit = {
-    val manifestEmbedder = readManifest(name).embedder
+  private def requireMatchingEmbedder(name: String, m: Model.Manifest): Unit = {
+    val manifestEmbedder = m.embedder
     require(manifestEmbedder.isEmpty || manifestEmbedder == embedder.name,
       s"collection '$name' was embedded with '$manifestEmbedder' but this manager " +
         s"uses '${embedder.name}' — construct the CollectionManager with the matching embedder")
   }
 
   /** The one mutation body behind [[update]] and [[delete]]: the documents
-    * with an id in `ids` (a broadcast `id` frame — bounded by the batch,
-    * never by the corpus, so every merge join is a broadcast hash join
-    * against the stored tables) leave both tables, and the `added` rows, if
-    * any, take their place with chunk ids continuing past the manifest
-    * high-water mark. On the bucketed layout only the dirty buckets are
-    * read and rewritten ([[live]] / [[put]]). BM25 merges incrementally; a
-    * built IVF index tombstones the removed chunk ids and, when `refreshIvf`,
-    * assigns the added chunks. Returns the footer-read manifest counters.
+    * with an id in `ids` (held on the driver, bounded by the batch, never by
+    * the corpus; they join as a broadcast local `id` frame) leave both
+    * tables, and the `added` rows, if any, take their place with chunk ids
+    * continuing past the manifest high-water mark. On the bucketed layout
+    * only the dirty buckets are read and rewritten ([[live]] / [[put]]).
+    * BM25 merges incrementally; a built IVF index tombstones the removed
+    * chunk ids and, when `refreshIvf`, assigns the added chunks. Returns the
+    * footer-read manifest counters.
     */
-  private def rewrite(name: String, old: Model.Manifest, ids: DataFrame,
+  private def rewrite(name: String, old: Model.Manifest, ids: Seq[String],
                       added: Option[DataFrame], refreshIvf: Boolean): (Long, Long, Long) = {
-    val docIds = ids.select(col("id").as("documentId"))
-    val buckets = dirtyBuckets(ids, old.bucketCount)
+    import spark.implicits._
+    val idDf = broadcast(ids.distinct.toDF("id"))
+    val docIds = idDf.select(col("id").as("documentId"))
+    val buckets = dirtyBuckets(idDf, old.bucketCount)
     // the removed chunks feed the incremental BM25 merge; indexedData rides
     // along so it can tokenize the REMOVED side for O(changed) df decrements
     // instead of re-scanning the corpus. MATERIALIZE before any swap: the
@@ -453,27 +453,24 @@ final class CollectionManager(
       .persist()
     removed.count()
 
-    val keptDocs = live(docsPath(name), buckets).join(ids, Seq("id"), "left_anti")
+    val keptDocs = live(docsPath(name), buckets).join(idDf, Seq("id"), "left_anti")
     put(added.fold(keptDocs)(keptDocs.unionByName(_)), "id", docsPath(name), buckets)
 
+    // the batch's chunks, built once from the batch in hand (the same rows
+    // the documents write just stored) and shared by the chunks write, BM25
+    // and IVF
+    val built = added.map(a =>
+      Indexing.buildChunks(a, embedder, startId = old.lastIndexItemId + 1).persist())
     val keptChunks = live(chunksPath(name), buckets)
       .join(docIds, Seq("documentId"), "left_anti")
-    val chunks = if (added.isEmpty) keptChunks else {
-      // the batch's chunks, built from its documents as just written
-      val built = Indexing.buildChunks(
-        live(docsPath(name), buckets).join(ids, Seq("id"), "left_semi"),
-        embedder, startId = old.lastIndexItemId + 1)
-      keptChunks.select(built.columns.map(col): _*).unionByName(built)
-    }
-    put(chunks, "documentId", chunksPath(name), buckets)
+    put(built.fold(keptChunks)(b => keptChunks.select(b.columns.map(col): _*).unionByName(b)),
+      "documentId", chunksPath(name), buckets)
 
     // BM25: incremental postings merge — the removed chunks' postings
     // tombstone out, tokenization (the dominant shuffle: explode over every
-    // token of every doc) runs over the NEW chunks only
-    val addedChunks = added.map(_ =>
-      this.chunks(name).join(docIds, Seq("documentId"), "left_semi"))
-    bm25Indexer(name).updateIncremental(removed,
-      addedChunks.getOrElse(this.chunks(name).limit(0)))
+    // token of every doc) runs over the NEW chunks only, and a delete adds
+    // no postings segment at all
+    bm25Indexer(name).updateIncremental(removed, built.getOrElse(this.chunks(name).limit(0)))
     // IVF follows the same incremental shape: tombstone the removed chunk
     // ids ALWAYS (otherwise vector_ivf keeps serving them; every tombstone
     // kills exactly one assigned row, since `removed` came from the live
@@ -483,11 +480,12 @@ final class CollectionManager(
     // here too would double-index every batch.
     ivfIndex(name).foreach { ivf =>
       val removedAsChunk = removed.select(col("docId").as("chunkId"))
-      addedChunks match {
+      built match {
         case Some(nc) if refreshIvf => ivf.refreshIncremental(removedAsChunk, nc)
         case _ => ivf.removeIds(removedAsChunk)
       }
     }
+    built.foreach(_.unpersist())
     removed.unpersist()
     manifestStats(name)
   }
@@ -500,47 +498,28 @@ final class CollectionManager(
     val old = readManifest(name)
     // updating with a mismatched embedder would interleave incompatible
     // vectors with the kept chunks — same guard as search, before any write
-    requireMatchingEmbedder(name)
-    val changedPlain = withChunks(changedRawDocs)
-    // watermark bookkeeping piggybacks on the batch's FIRST pass as an
-    // observed metric instead of its own max() action — one fewer full-batch
-    // job per update tick (the mutation path's job count is budget-spec'd)
-    val hasMeta = changedPlain.columns.contains("metadata")
-    val obs = if (hasMeta) Some(org.apache.spark.sql.Observation()) else None
-    val changed = obs match {
-      case Some(o) => changedPlain.observe(o,
-        max(element_at(col("metadata"), "lastModifiedAt")).as("lm"))
-      case None => changedPlain
-    }
-    val (nChunks, maxId, nDocs) = rewrite(name, old,
-      broadcast(changed.select(col("id")).distinct()), Some(changed), refreshIvf)
+    requireMatchingEmbedder(name, old)
+    val changed = withChunks(changedRawDocs)
+    // the merge reads the batch three times (this pass, the documents write,
+    // the chunk build): a batch still behind a file scan is cached, so its
+    // sources parse once and every read sees the same rows
+    if (Tables.scansFiles(changed)) changed.persist()
+    // one driver pass over the batch's (id, lastModifiedAt): the ids every
+    // merge join reads, and the batch's watermark. A local batch folds into
+    // its relation (no job); a cached batch costs one scan.
+    val rows = changed.select(col("id"), modifiedAt(changed)).collect()
+    val (nChunks, maxId, nDocs) =
+      try rewrite(name, old, rows.map(_.getString(0)).toSeq, Some(changed), refreshIvf)
+      finally changed.unpersist()
     // watermark = max EVER SEEN, maintained monotonically from the batch in
     // hand (O(batch), not an O(corpus) rescan): a replaced doc can carry an
     // older timestamp, but an incremental-read cursor must never move back —
     // everything up to the old mark has already been fetched. ISO-8601
     // strings order lexicographically, same comparison the old scan used.
+    val batchMax = rows.flatMap(r => Option(r.getString(1))).maxOption.getOrElse("")
     val m = old.copy(
       updatedTime = nowIso,
-      lastModifiedDocumentTime = {
-        // usually populated by the rewrite's passes over the batch above —
-        // no extra job. Inside foreachBatch the micro-batch runs on a CLONED
-        // session whose listener never reaches this Observation (measured:
-        // Observation.get deadlocks there), so an unreported observation
-        // falls back to the explicit max() job.
-        def reported(o: org.apache.spark.sql.Observation): Option[String] =
-          o.future.value match {
-            case Some(scala.util.Success(row)) =>
-              Some(Option(row.get(0)).map(_.toString).getOrElse(""))
-            case _ => None
-          }
-        val batchMax = obs.map { o =>
-          reported(o).getOrElse {
-            Thread.sleep(100) // listener reports async; one grace beat
-            reported(o).getOrElse(latestModified(changed))
-          }
-        }.getOrElse("")
-        Seq(old.lastModifiedDocumentTime, batchMax).max
-      },
+      lastModifiedDocumentTime = Seq(old.lastModifiedDocumentTime, batchMax).max,
       numberOfDocuments = nDocs, numberOfChunks = nChunks,
       // HWM never recedes (same guard as delete): an update whose docs carry
       // explicitly-empty chunks arrays can REMOVE the highest chunk ids while
@@ -563,8 +542,7 @@ final class CollectionManager(
   def delete(name: String, ids: Seq[String]): Model.Manifest = withWriterLock(name) {
     val old = readManifest(name)
     import spark.implicits._
-    val idDf = broadcast(ids.toDF("id"))
-    val (nChunks, maxId, nDocs) = rewrite(name, old, idDf, None, refreshIvf = false)
+    val (nChunks, maxId, nDocs) = rewrite(name, old, ids, None, refreshIvf = false)
 
     // dedup-on-arrival signatures follow the documents: a deleted doc's stale
     // signature must not block re-ingesting similar content later. Append
@@ -572,7 +550,7 @@ final class CollectionManager(
     // O(table) rewrite; minhashSigs' argmax view drops them at read time.
     if (fs.exists(new Path(sigsPath(name)))) {
       val rev = nextSigRev(name)
-      idDf.select(col("id").as("ex_id"))
+      ids.toDF("ex_id")
         .withColumn("sig0", lit(null).cast("string"))
         .withColumn("sig1", lit(null).cast("string"))
         .withColumn("sig2", lit(null).cast("string"))
@@ -1051,7 +1029,7 @@ final class CollectionManager(
       rrfK: Int = 60,
       indexWeights: Seq[Double] = Nil,
       matchQuery: Option[String] = None): DataFrame = {
-    requireMatchingEmbedder(name)
+    requireMatchingEmbedder(name, readManifest(name))
     val proj = Search.Projection(
       includeText, includeMatchedChunkContent, includeAllChunksContent,
       documents = if (includeText || includeAllChunksContent) Some(documents(name)) else None)

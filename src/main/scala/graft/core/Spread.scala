@@ -21,6 +21,10 @@ import org.apache.spark.sql.DataFrame
   *   - fewer partitions than cores → round-robin repartition to the session
   *     default parallelism, one narrow exchange of the (small by
   *     construction — it underfilled the byte-sized splits) input.
+  *   - no file scan under the optimized plan (a local batch, or rows already
+  *     cached) → IDENTITY, decided from the logical plan alone: such an
+  *     input is already in hand, and planning it to count its partitions
+  *     would run its exchanges and broadcasts at construction.
   *
   * Use ONLY in front of compute-dense map work. IO-shaped or
   * payload-carrying paths (e.g. pipeline decontamination, whose contract is
@@ -29,8 +33,8 @@ import org.apache.spark.sql.DataFrame
 object Spread {
   def forCompute(df: DataFrame): DataFrame = {
     val p = df.sparkSession.sparkContext.defaultParallelism
-    // rdd.getNumPartitions plans the physical RDD once (no job); operator
+    // rdd.getNumPartitions plans the physical RDD once; operator
     // construction paths call this once per query, not per row
-    if (df.rdd.getNumPartitions >= p) df else df.repartition(p)
+    if (!Tables.scansFiles(df) || df.rdd.getNumPartitions >= p) df else df.repartition(p)
   }
 }

@@ -5,6 +5,7 @@ import org.apache.parquet.format.converter.ParquetMetadataConverter
 import org.apache.parquet.hadoop.Footer
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetFileFormat, ParquetFooterReader, ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.types.StructType
 
@@ -39,6 +40,15 @@ object Tables {
     footerSchema(spark, path) match {
       case Some(schema) => spark.read.schema(schema).parquet(path)
       case None         => spark.read.parquet(path)
+    }
+
+  /** Whether `df`'s optimized plan reads files: false for a local batch or
+    * for rows already cached. Read from the logical plan, so no job runs.
+    */
+  def scansFiles(df: DataFrame): Boolean =
+    df.queryExecution.optimizedPlan.collectLeaves().exists {
+      case r: LogicalRelation => r.relation.isInstanceOf[HadoopFsRelation]
+      case _ => false
     }
 
   /** [[open]] when `path` exists, else None — one cheap `exists` call, for

@@ -440,59 +440,64 @@ final class Bm25Indexer(
     // with a positional artifact present, BOTH delta shapes derive from one
     // fused tokenize+explode+aggregate over the new chunks (the same
     // single-pass trade as indexWithPhrase); without one, the plain
-    // postings aggregate is the narrower plan
+    // postings aggregate is the narrower plan. New chunks that plan to an
+    // empty local relation (a delete's `limit(0)`; read from the plan, no
+    // job) append no postings, positions or suggest-key segment: an empty
+    // file would only grow the tail the fold triggers count
     val hasPositions = fsys.exists(new org.apache.hadoop.fs.Path(p("positions")))
-    val newBatch =
-      (if (hasPositions) postingsWithPositionsOf(newChunks) else postingsOf(newChunks))
-        .persist()
-    val newPostings = newBatch.select("term", "docId", "docLen", "tf")
-    newPostings
+    val newBatch = newChunks.queryExecution.optimizedPlan match {
+      case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation if l.data.isEmpty => None
+      case _ => Some((if (hasPositions) postingsWithPositionsOf(newChunks)
+        else postingsOf(newChunks)).persist())
+    }
+    val newPostings = newBatch.map(_.select("term", "docId", "docLen", "tf"))
+    newPostings.foreach(_
       .repartitionByRange(col("term"), col("docId"))
       .sortWithinPartitions("term", "docId")
-      .write.mode(SaveMode.Append).parquet(p("postings_delta"))
+      .write.mode(SaveMode.Append).parquet(p("postings_delta")))
     // positional artifact (when built): its delta appends alongside the
     // postings delta — same ∝-changed contract, same shared tombstones.
     // Lands BEFORE tombstones so a crash leaves over-visibility (healable),
     // never a doc whose old postings died without its replacement arriving.
-    if (hasPositions)
-      newBatch.select("term", "docId", "positions")
-        .repartitionByRange(col("term"), col("docId"))
-        .sortWithinPartitions("term", "docId")
-        .write.mode(SaveMode.Append).parquet(p("positions_delta"))
+    if (hasPositions) newBatch.foreach(_.select("term", "docId", "positions")
+      .repartitionByRange(col("term"), col("docId"))
+      .sortWithinPartitions("term", "docId")
+      .write.mode(SaveMode.Append).parquet(p("positions_delta")))
     removedChunks.select(col("docId"))
       .write.mode(SaveMode.Append).parquet(p("tombstones"))
     val deltaCapable = removedChunks.columns.contains("indexedData") &&
       Tables.open(spark, p("corpus")).columns.contains("totalLen")
-    // the batch's signed df delta, kept in hand when the delta path ran —
+    // the batch's per-term stat delta, kept in hand when the delta path ran:
     // the suggest-key maintenance below re-uses it instead of paying its own
     // distinct over the batch postings
-    var dfDelta: Option[DataFrame] = None
+    var perTerm: Option[DataFrame] = None
     if (!deltaCapable) deriveStats()
     else {
-      // One signed postings frame feeds BOTH stat deltas: the removed chunks
-      // tokenize exactly once (persisted alongside the new postings), not once
-      // per aggregate — at sf0.1 the double-tokenize was the measured hot spot
-      // of the delta path (t2c bench row).
-      val removedPostings = postingsOf(
+      // ONE aggregate over one signed postings frame feeds BOTH stat deltas
+      // (the removed chunks tokenize once). Per term: df (+1 per (term, doc)
+      // entering, -1 per leaving), the signed token count, and the signed
+      // shares tf/docLen. A doc's tf sum to its docLen, so over all terms
+      // the counts add up to the signed totalLen exactly and the shares to
+      // the signed doc count (a double sum, rounded: its error stays far
+      // below 0.5 for any batch).
+      val removedSigned = postingsOf(
         removedChunks.select(col("docId").as("chunkId"), col("indexedData")))
-      val signed = newPostings.withColumn("sign", lit(1L))
-        .unionByName(removedPostings.withColumn("sign", lit(-1L)))
+        .withColumn("sign", lit(-1L))
+      val agg = newPostings.fold(removedSigned)(
+          _.withColumn("sign", lit(1L)).unionByName(removedSigned))
+        .groupBy("term").agg(sum("sign").as("df"),
+          sum(col("tf") * col("sign")).as("len"),
+          sum(col("sign") * col("tf") / col("docLen")).as("docs"))
         .persist()
-      // df: +1 per (term, doc) entering, -1 per (term, doc) leaving; net-zero
-      // terms are dropped so the delta segment is bounded by the batch vocab
-      val dfd = signed.groupBy("term").agg(sum("sign").as("df"))
-        .filter(col("df") =!= 0)
-        .persist()
-      dfd.coalesce(1)
+      // net-zero terms drop: the delta segment is bounded by the batch vocab
+      agg.filter(col("df") =!= 0).select("term", "df").coalesce(1)
         .write.mode(SaveMode.Append).parquet(p("termDf_delta"))
       // corpus: signed doc-count and token-length totals, one appended row
-      signed.select("docId", "docLen", "sign").distinct()
-        .agg(coalesce(sum("sign"), lit(0L)).as("n"),
-          coalesce(sum(col("docLen") * col("sign")), lit(0L)).as("totalLen"))
+      agg.agg(coalesce(round(sum("docs")).cast("long"), lit(0L)).as("n"),
+          coalesce(sum("len"), lit(0L)).as("totalLen"))
         .coalesce(1)
         .write.mode(SaveMode.Append).parquet(p("corpus_delta"))
-      signed.unpersist()
-      dfDelta = Some(dfd)
+      perTerm = Some(agg)
     }
     // suggest-key maintenance (when a stamped artifact exists): append the
     // delete keys of the batch's GENUINELY-NEW vocabulary — ∝ changed docs
@@ -503,24 +508,25 @@ final class Bm25Indexer(
     // artifact — a duplicate append is harmless, deduped at candidate time
     // and folded by compact); a term with df delta ≤ 0 NECESSARILY appeared
     // in the removed chunks, so it was indexed — and keyed — before. Deleted
-    // terms' keys die at the live-df join; keys only NOMINATE.
+    // terms' keys die at the live-df join; keys only NOMINATE. With no new
+    // chunks there is no new term, so only the restamp runs (the df delta
+    // changed the vocabulary stamp).
     // Keys append as DELTA SEGMENTS (not into the base dir) so the fold
     // triggers see their growth: tailBytes/tailSegments count the dir, and a
     // long run of tiny ticks trips the segment-count trigger before suggest
     // queries pay per-file read amplification forever.
     readSuggestMeta().foreach { case (me, _) =>
-      val batchTerms = dfDelta match {
-        case Some(dfd) => dfd.filter(col("df") > 0).select("term")
-        case None => newPostings.select("term").distinct() // stats-fallback path
+      newPostings.foreach { np =>
+        val batchTerms = perTerm.fold(np.select("term").distinct())( // stats-fallback path
+          _.filter(col("df") > 0).select("term"))
+        Suggest.deletionKeys(batchTerms, "term", me)
+          .withColumn("max_edits", lit(me))
+          .write.mode(SaveMode.Append).parquet(p("suggest_keys_delta"))
       }
-      Suggest.deletionKeys(batchTerms, "term", me)
-        .withColumn("max_edits", lit(me))
-        .write.mode(SaveMode.Append).parquet(p("suggest_keys_delta"))
       writeSuggestMeta(me) // stamp AFTER the keys land (crash → stale, never false-fresh)
     }
-    dfDelta.foreach(_.unpersist())
-    newBatch.unpersist()
-    ()
+    perTerm.foreach(_.unpersist())
+    newBatch.foreach(_.unpersist())
   }
 
   /** Fold base ∪ delta ⊖ tombstones into a fresh base segment — the LSM

@@ -37,9 +37,9 @@ object StreamingUpdate {
     * `appendIvf`: when an IVF index exists for the collection, each batch's
     * new chunk vectors ALSO append into the frozen-centroid partition dirs
     * ([[graft.operators.IvfVectorIndexer.append]]) — probes see fresh
-    * documents on their next scan without a rebuild. Replaced documents leave
-    * stale entries behind (append-only); run `refresh`/rebuild when churn
-    * warrants, same trade as any write-optimized ANN segment.
+    * documents on their next scan without a rebuild. The merge tombstones
+    * replaced documents' old vectors in the index; that tail folds under
+    * the same two budgets as BM25's.
     *
     * `dedupOnArrival`: gate each batch against the collection's persisted
     * minhash signature table ([[graft.operators.Dedup.incrementalNearDups]])

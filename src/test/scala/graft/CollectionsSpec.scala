@@ -183,6 +183,25 @@ class CollectionsSpec extends AnyFunSuite with SparkSuite {
       .collect().forall(_.getString(0) != "d2"))
   }
 
+  test("delete appends no BM25 postings segment: the tail grows by its three stat files") {
+    val tmp = Files.createTempDirectory("graft-coll").toString
+    val cm = mkManager(tmp)
+    cm.create("c8", rawDocs(docsV1))
+    cm.update("c8", rawDocs(Seq(("d2", "file://d2",
+      Map("space" -> "OPS", "lastModifiedAt" -> "2026-02-01T00:00:00"), "deploy guide rewritten"))))
+    def files(sub: String): Int = Option(new java.io.File(s"$tmp/c8/indexes/bm25/$sub")
+      .listFiles()).toSeq.flatten.count(_.getName.endsWith(".parquet"))
+    val (postingsBefore, tailBefore) = (files("postings_delta"), cm.bm25TailSegments("c8"))
+    assert(postingsBefore === 1)
+
+    cm.delete("c8", Seq("d1"))
+    // tombstones, termDf delta and corpus delta: one file each, no empty postings delta
+    assert(files("postings_delta") === postingsBefore)
+    assert(cm.bm25TailSegments("c8") === tailBefore + 3)
+    assert(cm.search("c8", "spark query engine", indexNames = Some(Seq("bm25")))
+      .collect().forall(_.getString(0) != "d1"))
+  }
+
   test("incremental update: anti-join replace + id high-water mark") {
     val tmp = Files.createTempDirectory("graft-coll").toString
     val cm = mkManager(tmp)
